@@ -65,20 +65,20 @@ def main() -> int:
         if not ok:
             failures.append(name)
 
-    # 1. raster scan pushdown (JVM-scan path; the default manifest-scan
-    # path bypasses the JVM scan entirely by shipping (file, row-group)
-    # rows the kernel reads with pyarrow directly)
-    os.environ["YG_MANIFEST_SCAN"] = "0"
-    try:
-        r = harness.lineitem_rasters(SF_DIR)
-        df = X.tiles_dataframe(X._as_root(r["qty"] * 2), spark)  # noqa: SLF001
-        plan = plan_of(df)
-        pushed = [l for l in plan.splitlines() if "PushedFilters" in l]
-        ok = any("tile_y" in l and "tile_x" in l for l in pushed)
-        check("raster scan pushes tile-range filters to parquet", ok,
-              pushed[0] if pushed else "(no PushedFilters line)")
-    finally:
-        del os.environ["YG_MANIFEST_SCAN"]
+    # 1. raster scan pushdown on the general (JVM-scan) plan.  An aligned
+    # read takes the manifest, which ships (file, row-group) rows the
+    # kernel reads with pyarrow and has no JVM scan; reading the raster at
+    # an origin shifted by one pixel unaligns it from the tile grid, so the
+    # planner falls back to the JVM scan by itself.
+    qty = harness.lineitem_rasters(SF_DIR)["qty"]
+    a, proj = qty.area, qty.projection
+    shifted = yg.Area(a.left + proj.xstep, a.top + proj.ystep, a.right, a.bottom, proj)
+    df = X.tiles_dataframe(X._as_root(qty.as_area(shifted) * 2), spark)  # noqa: SLF001
+    plan = plan_of(df)
+    pushed = [l for l in plan.splitlines() if "PushedFilters" in l]
+    ok = any("tile_y" in l and "tile_x" in l for l in pushed)
+    check("raster scan pushes tile-range filters to parquet", ok,
+          pushed[0] if pushed else "(no PushedFilters line)")
 
     # 2. PIP broadcast / inlined cover
     pts = harness.customer_points(spark, SF_DIR).withColumn(

@@ -43,7 +43,9 @@ class TestMultiRingHalo:
     def test_conv2d_pad_exceeding_tile_repartition_fallback(self, spark, tmp_path,
                                                             monkeypatch):
         """Same case through the non-broadcast (repartition) halo path."""
-        monkeypatch.setenv("YG_HALO_BROADCAST_MAX", "1")
+        from yirgacheffe_spark.plans import executor
+
+        monkeypatch.setattr(executor, "HALO_BROADCAST_MAX", 1)
         rng = np.random.default_rng(18)
         data = rng.normal(size=(16, 16)).astype(np.float32)
         path = str(tmp_path / "big_pad_rep")

@@ -198,7 +198,9 @@ def test_conv2d_halo_fallback_matches_broadcast(spark, tmp_path, monkeypatch):
     broadcast_out = expr.to_numpy(spark=spark)
     broadcast_sum = expr.sum(spark=spark)
 
-    monkeypatch.setenv("YG_HALO_BROADCAST_MAX", "0")  # force the fallback
+    from yirgacheffe_spark.plans import executor
+
+    monkeypatch.setattr(executor, "HALO_BROADCAST_MAX", 0)  # force the fallback
     fallback_out = expr.to_numpy(spark=spark)
     fallback_sum = expr.sum(spark=spark)
     np.testing.assert_array_equal(fallback_out, broadcast_out)
@@ -214,7 +216,7 @@ def test_conv2d_over_widened_window_sees_neighbour_data(spark, tmp_path, monkeyp
     import numpy as np
 
     import yirgacheffe_spark as yg
-    from yirgacheffe_spark.plans import kernel
+    from yirgacheffe_spark.plans import executor, kernel
 
     rng = np.random.default_rng(5)
     data = rng.integers(1, 9, (8, 8)).astype(np.float32)
@@ -229,7 +231,7 @@ def test_conv2d_over_widened_window_sees_neighbour_data(spark, tmp_path, monkeyp
     assert local[8].sum() > 0  # the border outside coverage is nonzero
 
     np.testing.assert_array_equal(expr.to_numpy(spark=spark), local)
-    monkeypatch.setenv("YG_HALO_BROADCAST_MAX", "0")
+    monkeypatch.setattr(executor, "HALO_BROADCAST_MAX", 0)
     np.testing.assert_array_equal(expr.to_numpy(spark=spark), local)
 
 
@@ -237,8 +239,8 @@ def test_conv2d_manifest_halo_path_matches_jvm(spark, tmp_path, monkeypatch):
     """When storage tiles coincide with computation tiles, a stencil query
     takes the manifest body (pyarrow-direct decode) with halo strips
     collected once and shipped inside the payload broadcast.  Results must
-    be bit-identical to the JVM body scan + halo join path and to the
-    local oracle — including tiles outside stored coverage, which must
+    be bit-identical to the general fallback (JVM scan of halo-sliced
+    strips + repartition) and to the local oracle — including tiles outside stored coverage, which must
     still receive their neighbours' strips."""
     import numpy as np
 
@@ -266,10 +268,10 @@ def test_conv2d_manifest_halo_path_matches_jvm(spark, tmp_path, monkeypatch):
     man_sum = expr.sum(spark=spark)
     np.testing.assert_array_equal(man_out, local)
 
-    monkeypatch.setenv("YG_MANIFEST_SCAN", "0")
-    np.testing.assert_array_equal(expr.to_numpy(spark=spark), man_out)
-    assert expr.sum(spark=spark) == man_sum
-    monkeypatch.delenv("YG_MANIFEST_SCAN")
+    with monkeypatch.context() as m:  # force the general fallback
+        m.setattr(executor, "_manifest_rows", lambda *a, **k: None)
+        np.testing.assert_array_equal(expr.to_numpy(spark=spark), man_out)
+        assert expr.sum(spark=spark) == man_sum
 
     # Widened window: the border one tile outside stored coverage reads
     # real neighbour pixels through the broadcast halo map too.
@@ -283,7 +285,7 @@ def test_conv2d_manifest_halo_path_matches_jvm(spark, tmp_path, monkeypatch):
 def test_multi_table_planar_manifest_matches(spark, tmp_path, monkeypatch):
     """Per-band tables on one grid take the co-partitioned multi-table
     manifest scan (zero shuffles, slot completeness verified) and match
-    both the local oracle and the JVM fallback plans bit-for-bit."""
+    both the local oracle and the general fallback plan bit-for-bit."""
     import numpy as np
 
     import yirgacheffe_spark as yg
@@ -310,10 +312,10 @@ def test_multi_table_planar_manifest_matches(spark, tmp_path, monkeypatch):
     got_sum = expr.sum(spark=spark)
     np.testing.assert_array_equal(got, local)
 
-    monkeypatch.setenv("YG_MANIFEST_SCAN", "0")
-    np.testing.assert_array_equal(expr.to_numpy(spark=spark), got)
-    assert expr.sum(spark=spark) == got_sum
-    monkeypatch.delenv("YG_MANIFEST_SCAN")
+    with monkeypatch.context() as m:  # force the general fallback
+        m.setattr(executor, "_manifest_rows", lambda *a, **k: None)
+        np.testing.assert_array_equal(expr.to_numpy(spark=spark), got)
+        assert expr.sum(spark=spark) == got_sum
 
     # Tables whose stored grids differ (different heights) must NOT be
     # stitched by the multi-table manifest — the general plans take over.
@@ -326,3 +328,74 @@ def test_multi_table_planar_manifest_matches(spark, tmp_path, monkeypatch):
     assert executor._manifest_rows(spark, payload2, box2) is None
     np.testing.assert_array_equal(
         expr2.to_numpy(spark=spark), kernel.evaluate_window(expr2))
+
+
+@pytest.mark.parametrize("stencil", [False, True])
+def test_single_leaf_shifted_origin_general_plan(spark, tmp_path, stencil):
+    """One parquet leaf read at an origin shifted by a non-multiple of the
+    tile size: the stored grid no longer aligns, so the planner takes the
+    general fallback (halo-sliced strips + repartition) for the plain read
+    and for a stencil over it.  The area lies inside the leaf, and its
+    bottom/right edge falls on a stored-tile boundary, so the stencil's
+    halo must read a stored tile that the window itself never touches."""
+    from yirgacheffe_spark.plans import executor, kernel
+
+    rng = np.random.default_rng(41)
+    data = rng.integers(1, 60, (18, 22)).astype(np.float32)
+    proj = yg.MapProjection("epsg:4326", 0.01, -0.01)
+    layer = yg.write_array_as_raster_table(
+        str(tmp_path / "src"), data, yg.Area(0.0, 0.0, 0.22, -0.18, proj),
+        tile_size=4,
+    )
+    shifted = layer.as_area(yg.Area(0.01, -0.01, 0.16, -0.16, proj))
+    expr = shifted.conv2d(np.ones((3, 3), np.float32)) if stencil else shifted + 1
+    _spark, _root, payload, _bc, _df = executor._build(expr, spark)
+    assert "manifest" not in payload
+    local = kernel.evaluate_window(expr)
+    np.testing.assert_array_equal(expr.to_numpy(spark=spark), local)
+    assert expr.sum(spark=spark) == pytest.approx(float(local.sum()))
+
+
+def _sparse_table(spark, path):
+    """12x16 raster saved sparse with 4x4 tiles: two non-zero tiles, so
+    most stored tiles are dropped and only a key scan knows which exist."""
+    data = np.zeros((12, 16))
+    data[0:4, 4:8] = np.arange(16).reshape(4, 4) + 1
+    data[8:12, 12:16] = 7
+    yg.from_array(data, (0.0, 0.0), PROJ).save(path, sparse=True, spark=spark)
+    return data
+
+
+def test_conv2d_over_sparse_table(spark, tmp_path):
+    """A stencil over a table saved with sparse=True (the manifest needs
+    dense coverage) runs through the general fallback and matches the
+    local oracle, including halo reads into dropped all-zero tiles."""
+    from yirgacheffe_spark.plans import executor, kernel
+
+    path = str(tmp_path / "sp")
+    _sparse_table(spark, path)
+    expr = yg.read_raster(path).conv2d(np.ones((3, 3), np.float32))
+    _spark, _root, payload, _bc, _df = executor._build(expr, spark)
+    assert "manifest" not in payload
+    np.testing.assert_array_equal(expr.to_numpy(spark=spark),
+                                  kernel.evaluate_window(expr))
+
+
+def test_sparse_aligned_single_leaf_plan_shape(spark, tmp_path):
+    """A sparse aligned one-leaf read is already one row per tile: the
+    payload rows are not repartitioned, and the only Exchange is in the
+    key-only anti-join that finds the dropped tiles."""
+    from yirgacheffe_spark.plans import executor
+
+    path = str(tmp_path / "sp")
+    data = _sparse_table(spark, path)
+    expr = yg.read_raster(path) * 2
+    _spark, _root, payload, _bc, df = executor._build(expr, spark)
+    assert "manifest" not in payload
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    payload_side, key_side = plan.split("LeftAnti")
+    assert "Exchange" not in payload_side
+    assert "Exchange" in key_side
+    scans = [line for line in key_side.splitlines() if "FileScan" in line]
+    assert scans and all("payload" not in line for line in scans)
+    np.testing.assert_array_equal(expr.to_numpy(spark=spark), data * 2)

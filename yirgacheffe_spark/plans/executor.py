@@ -4,11 +4,18 @@ Physical shape of every computation:
 
 1. **Plan (driver)** — resolve the operation area/window with the reference's
    extent algebra, split the window into a grid of tiles, and classify
-   leaves: parquet-backed rasters become DataFrame scans + a *re-tiling*
-   equi-join keyed on tile coordinates (Catalyst prunes them by the window's
-   tile range, pushed down to parquet row-group stats); everything else
-   (in-memory arrays, constants, generated layers) ships inside the kernel
-   closure via a broadcast.
+   leaves: in-memory arrays, constants and generated layers ship inside the
+   kernel closure via a broadcast; parquet-backed rasters are scanned.  The
+   scan takes one of three plans (``_build``):
+
+   * no parquet leaf — the bare tile grid;
+   * the **manifest** — every leaf an aligned dense table on one stored
+     grid: (file, row-group) rows, pruned by footer stats, that the kernel
+     decodes with pyarrow itself (a single stencil leaf gets its halo
+     strips as a broadcast map);
+   * the **general fallback** — JVM scans with tile-range predicates pushed
+     to parquet row-group stats, re-tiled into (tile, piece) rows and
+     co-located per tile by one repartition on tile coordinates.
 2. **Execute (cluster)** — one ``mapInArrow`` kernel per stage evaluates the
    *whole* numpy expression tree per tile (operator fusion, per-tile CSE),
    emitting either result tiles (save / read_array) or per-tile aggregate
@@ -26,16 +33,17 @@ Implementation notes for throughput:
   per path, so repeated terminal actions cost milliseconds of planning.
 
 Scale notes: tiles are the unit of parallelism and shuffle keys are tile
-coordinates, so plans scale by adding executors; the only shuffle per parquet
-leaf is its re-tiling join (none when the source grid aligns 1:1 — the common
-case of rasters written by this engine being read back at the same grid);
-aggregations move eight bytes per tile.
+coordinates, so plans scale by adding executors; the only payload shuffle is
+the general fallback's repartition (none on the manifest — the common case
+of rasters written by this engine being read back at the same grid — nor
+for a single aligned leaf); aggregations move eight bytes per tile.
 """
 
 from __future__ import annotations
 
 import math
 import os
+from functools import reduce
 from typing import Any, Iterator
 
 import numpy as np
@@ -145,11 +153,44 @@ _PIECE_PA_TYPE = pa.struct(
     [("slot", pa.int32()), ("py0", pa.int64()), ("px0", pa.int64()),
      ("sh", pa.int32()), ("sw", pa.int32()), ("p", pa.binary())]
 )
+MANIFEST_SCHEMA = "file string, rg int, mty int, mtx int"
+
+# Broadcasting the halo side is only sane while it fits comfortably in every
+# executor: above this budget a stencil plan takes the general fallback,
+# whose strip rows are co-located with the body by ONE payload repartition
+# (linear, cluster-safe).  At 100 TB the strips alone are ~1.6% of the
+# raster — terabytes — so the broadcast must be size-guarded, not assumed.
+HALO_BROADCAST_MAX = 256 * 1024 * 1024
+
+
+def _aligned_geom(meta: dict, payload: dict) -> bool:
+    """The leaf's stored grid coincides with the computation grid (equal
+    tile size, whole-tile origin offset): each stored tile's body feeds
+    exactly one computation tile."""
+    s = meta["S"]
+    return (s == payload["ty_size"] == payload["tx_size"]
+            and meta["ayoff"] % s == 0 and meta["axoff"] % s == 0)
+
+
+def _stored_tile_range(meta: dict, payload: dict,
+                       tile_box: tuple[int, int, int, int], pad: int):
+    """(sy_lo, sy_hi, sx_lo, sx_hi): the leaf's stored tiles that the
+    computation tiles of ``tile_box``, grown by ``pad`` pixels, can touch."""
+    s = meta["S"]
+    ayoff, axoff = meta["ayoff"], meta["axoff"]
+    ty_size, tx_size = payload["ty_size"], payload["tx_size"]
+    ty_lo, ty_hi, tx_lo, tx_hi = tile_box
+    y_px_lo = ty_lo * ty_size - pad + ayoff
+    y_px_hi = min((ty_hi + 1) * ty_size, payload["window"].ysize) + pad + ayoff
+    x_px_lo = tx_lo * tx_size - pad + axoff
+    x_px_hi = min((tx_hi + 1) * tx_size, payload["window"].xsize) + pad + axoff
+    stored_y, stored_x = meta["stored_tiles"]
+    return (int(max(y_px_lo // s, 0)), int(min((y_px_hi - 1) // s, stored_y - 1)),
+            int(max(x_px_lo // s, 0)), int(min((x_px_hi - 1) // s, stored_x - 1)))
 
 
 def _slot_rows(spark: SparkSession, payload: dict, slot: int,
-               tile_box: tuple[int, int, int, int],
-               body_only: bool = False):
+               tile_box: tuple[int, int, int, int]):
     """Scan one parquet leaf and emit one row per (computation tile, piece):
     ``(ty, tx, piece struct<slot, py0, px0, sh, sw, p>)``.
 
@@ -163,7 +204,6 @@ def _slot_rows(spark: SparkSession, payload: dict, slot: int,
     ayoff, axoff = meta["ayoff"], meta["axoff"]
     ty_size, tx_size = payload["ty_size"], payload["tx_size"]
     ty_lo, ty_hi, tx_lo, tx_hi = tile_box
-    stored_y, stored_x = meta["stored_tiles"]
 
     # Computation tiles this leaf can contribute to (its coverage rectangle).
     leaf_h, leaf_w = meta["leaf_h"], meta["leaf_w"]
@@ -174,29 +214,15 @@ def _slot_rows(spark: SparkSession, payload: dict, slot: int,
         min(tx_hi, (-axoff + leaf_w + p - 1) // tx_size),
     )
 
-    # Leaf pixel range the requested tile box can touch (with halo).
-    y_px_lo = ty_lo * ty_size - p + ayoff
-    y_px_hi = min((ty_hi + 1) * ty_size, payload["window"].ysize) + p + ayoff
-    x_px_lo = tx_lo * tx_size - p + axoff
-    x_px_hi = min((tx_hi + 1) * tx_size, payload["window"].xsize) + p + axoff
-    sy_lo = max(y_px_lo // s, 0)
-    sy_hi = min((y_px_hi - 1) // s, stored_y - 1)
-    sx_lo = max(x_px_lo // s, 0)
-    sx_hi = min((x_px_hi - 1) // s, stored_x - 1)
-
+    sy_lo, sy_hi, sx_lo, sx_hi = _stored_tile_range(meta, payload, tile_box, p)
     src = _read_raster_table(spark, meta["path"]).where(
-        f"band = {meta['band']} AND tile_y BETWEEN {int(sy_lo)} AND {int(sy_hi)} "
-        f"AND tile_x BETWEEN {int(sx_lo)} AND {int(sx_hi)}"
+        f"band = {meta['band']} AND tile_y BETWEEN {sy_lo} AND {sy_hi} "
+        f"AND tile_x BETWEEN {sx_lo} AND {sx_hi}"
     )
 
-    # Aligned geometry: stored grid coincides with the computation grid
-    # (equal tile size, whole-tile origin offset) — each stored tile's body
-    # feeds exactly one computation tile, no explode, no duplication.  With
-    # no halo that is the whole story; with a stencil halo the caller pairs
-    # these body rows with broadcast halo strips (body_only=True).
-    aligned_geom = s == ty_size == tx_size and ayoff % s == 0 and axoff % s == 0
-    aligned = aligned_geom and p == 0
-    if aligned or (body_only and aligned_geom):
+    # Aligned geometry with no halo: each stored tile is exactly one
+    # computation tile's piece — no explode, no duplication.
+    if p == 0 and _aligned_geom(meta, payload):
         rows = src.selectExpr(
             f"CAST((CAST(tile_y AS BIGINT) * {s} - {ayoff}) / {ty_size} AS INT) AS ty",
             f"CAST((CAST(tile_x AS BIGINT) * {s} - {axoff}) / {tx_size} AS INT) AS tx",
@@ -204,7 +230,7 @@ def _slot_rows(spark: SparkSession, payload: dict, slot: int,
             f"CAST(tile_x AS BIGINT) * {s} AS px0, ysize AS sh, xsize AS sw, "
             f"payload AS p) AS piece",
         ).where(f"ty BETWEEN {ty_lo} AND {ty_hi} AND tx BETWEEN {tx_lo} AND {tx_hi}")
-        return rows, True, cov, src
+        return rows, True, cov
 
     # General: window-space start of each stored tile decides which
     # computation tiles (with halo) it intersects; explode those ranges and
@@ -244,9 +270,7 @@ def _slot_rows(spark: SparkSession, payload: dict, slot: int,
             f"CAST(tile_x AS BIGINT) * {s} AS px0, sh, xsize AS sw, pslice AS p) AS piece",
         )
     )
-    return rows, False, cov, src
-
-
+    return rows, False, cov
 
 
 def _strip_rows_for_tile(out_ty, out_tx, out_struct, slot, payload, tile_box,
@@ -304,142 +328,137 @@ def _strip_rows_for_tile(out_ty, out_tx, out_struct, slot, payload, tile_box,
             )
 
 
+# Footer statistics cache: repeated terminal actions over the same raster
+# (every bench/production loop) must not re-read every parquet footer on the
+# driver.  Keyed by (file, mtime); entries are (row_group, (ty_min, ty_max),
+# (tx_min, tx_max)) with None when the writer recorded no statistics.
+_FOOTER_CACHE: dict[tuple[str, float], list] = {}
+
+# Keyed by (path, mtime_ns, size), NOT path alone: an overwrite that reuses
+# the file name would otherwise keep serving the DELETED inode through the
+# cached open handle — stale reads that depend on which worker gets the task
+# (caught as a flaky overwrite-loop test; one os.stat per row group is noise
+# next to the footer parse the cache avoids).
+_PQ_FILE_CACHE: dict[tuple, Any] = {}
+
+
+def _footer_cache_put(key: tuple[str, float], value: list) -> None:
+    # FIFO size bound — must run on EVERY insertion point (the manifest-hit
+    # branch previously skipped it, so long-lived sessions touching many
+    # distinct files/mtimes grew the driver cache unboundedly).
+    while len(_FOOTER_CACHE) >= 4096:
+        _FOOTER_CACHE.pop(next(iter(_FOOTER_CACHE)))
+    _FOOTER_CACHE[key] = value
+
+
+def _footer_stats(path: str) -> list:
+    key = (path, os.stat(path).st_mtime)
+    got = _FOOTER_CACHE.get(key)
+    if got is None:
+        # Prefer the save-time manifest: one JSON fetch for the whole table
+        # instead of a footer read per file (the scale path for tables with
+        # many part files on object storage).
+        from ..sources.parquet import (  # pylint: disable=C0415
+            read_tile_manifest,
+            row_group_tile_stats,
+        )
+
+        manifest = read_tile_manifest(os.path.dirname(path))
+        if manifest is not None and os.path.basename(path) in manifest:
+            got = manifest[os.path.basename(path)]
+            _footer_cache_put(key, got)
+            return got
+        got = row_group_tile_stats(path)
+        _footer_cache_put(key, got)
+    return got
+
+
+def _pruned_row_groups(path: str, band_lo: int, band_hi: int,
+                       stored_range: tuple[int, int, int, int]) -> list:
+    """(file, row_group, tile_y range, tile_x range) for every row group of
+    the table at ``path`` whose footer stats may hold a tile of a band in
+    [band_lo, band_hi] inside ``stored_range`` (sy_lo, sy_hi, sx_lo, sx_hi)."""
+    sy_lo, sy_hi, sx_lo, sx_hi = stored_range
+    part_files = sorted(
+        os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")
+    )
+    out = []
+    for f in part_files:
+        for rg, ymm, xmm, bmm in _footer_stats(f):
+            # Band pruning: non-interleaved multiband tables are band-pure
+            # per file, so a single-band query drops the other bands' row
+            # groups entirely instead of decoding their payloads only to
+            # discard every row kernel-side.
+            if bmm is not None and (bmm[1] < band_lo or bmm[0] > band_hi):
+                continue
+            if ymm is not None and (ymm[1] < sy_lo or ymm[0] > sy_hi):
+                continue
+            if xmm is not None and (xmm[1] < sx_lo or xmm[0] > sx_hi):
+                continue
+            out.append((f, rg, ymm, xmm))
+    return out
+
+
+def _read_row_group(f: str, rg: int):
+    """Decode one row group of a raster table through the worker's cached
+    ``ParquetFile`` handle: (table, payload column as one Arrow array)."""
+    import pyarrow.parquet as pq  # pylint: disable=C0415
+
+    st = os.stat(f)
+    fkey = (f, st.st_mtime_ns, st.st_size)
+    pf = _PQ_FILE_CACHE.get(fkey)
+    if pf is None:
+        if len(_PQ_FILE_CACHE) > 64:
+            _PQ_FILE_CACHE.clear()
+        pf = _PQ_FILE_CACHE[fkey] = pq.ParquetFile(f)
+    tbl = pf.read_row_group(
+        rg, columns=["band", "tile_y", "tile_x", "ysize", "xsize", "payload"]
+    )
+    pay = tbl.column("payload")
+    return tbl, pay.chunk(0) if pay.num_chunks == 1 else pay.combine_chunks()
+
+
+def _manifest_df(spark: SparkSession, elements: list,
+                 grouped: bool = False) -> DataFrame:
+    """Manifest rows as a DataFrame, parallelized directly in even slices of
+    ``elements`` (a createDataFrame + repartition of this dim-sized list
+    costs an extra exchange stage).  ``grouped``: each element is a list of
+    rows that must stay in one slice."""
+    parallelism = max(spark.sparkContext.defaultParallelism * 2, 1)
+    rdd = spark.sparkContext.parallelize(elements, min(len(elements), parallelism))
+    if grouped:
+        rdd = rdd.flatMap(lambda g: g)
+    return spark.createDataFrame(rdd, MANIFEST_SCHEMA)
+
+
 def _halo_strips(spark: SparkSession, payload: dict, slot: int,
-                 tile_box: tuple[int, int, int, int], src: DataFrame) -> DataFrame:
-    """Halo exchange for an aligned leaf with a stencil padding: a Python
-    pass over the scan emits only the edge strips each neighbouring tile
-    needs (a few KB per tile), which are grouped and *broadcast* back onto
-    the unshuffled body scan — the payload itself never moves.
-    """
+                 tile_box: tuple[int, int, int, int]) -> DataFrame:
+    """Halo exchange for an aligned leaf with a stencil padding: workers read
+    their (file, row-group) assignments with the C++ parquet reader and emit
+    only the edge strips each neighbouring tile needs (a few KB per tile) —
+    skipping the JVM payload decode AND the JVM->Arrow transfer of every
+    full tile (measured ~3x cheaper than a JVM scan of the same strips)."""
     meta = payload["slot_meta"][slot]
-    ty_lo, ty_hi, tx_lo, tx_hi = tile_box
-
-    def extract(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        out_ty, out_tx, out_struct = [], [], []
-        for batch in batches:
-            sy_c = batch.column(batch.schema.get_field_index("tile_y")).to_numpy()
-            sx_c = batch.column(batch.schema.get_field_index("tile_x")).to_numpy()
-            sh_c = batch.column(batch.schema.get_field_index("ysize")).to_numpy()
-            sw_c = batch.column(batch.schema.get_field_index("xsize")).to_numpy()
-            pay = batch.column(batch.schema.get_field_index("payload"))
-            for i in range(batch.num_rows):
-                _strip_rows_for_tile(
-                    out_ty, out_tx, out_struct, slot, payload,
-                    (ty_lo, ty_hi, tx_lo, tx_hi), meta,
-                    int(sy_c[i]), int(sx_c[i]), int(sh_c[i]), int(sw_c[i]),
-                    lambda i=i: memoryview(pay[i].as_buffer()),
-                )
-        if out_ty:
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_ty, pa.int32()),
-                    pa.array(out_tx, pa.int32()),
-                    pa.array(out_struct, type=_PIECE_PA_TYPE),
-                ],
-                names=["ty", "tx", "piece"],
-            )
-
-    return src.mapInArrow(extract, schema=f"ty int, tx int, piece {PIECE_STRUCT_SQL}")
-
-
-def _halo_strips_direct(spark: SparkSession, payload: dict, slot: int,
-                        tile_box: tuple[int, int, int, int]) -> DataFrame | None:
-    """Pyarrow-direct twin of ``_halo_strips``: workers read their (file,
-    row-group) assignments with the C++ parquet reader and emit the same
-    strip rows — skipping the JVM payload decode AND the JVM->Arrow
-    transfer of every full tile just to slice a few KB of edges (measured
-    1.15s of the 3.7s conv2d query at sf1; the direct form is ~3x
-    cheaper).  Returns None when the table cannot be footer-listed locally
-    (non-local path) or manifest scanning is disabled — callers fall back
-    to the JVM-scan form, which works everywhere."""
-    if os.environ.get("YG_MANIFEST_SCAN", "1") != "1":
-        return None
-    meta = payload["slot_meta"][slot]
-    if meta.get("interleaved"):
-        # Interleaved multiband row groups cannot skip the other bands'
-        # payload rows in a C++ read, while the JVM scan at least filters
-        # them before the Arrow transfer — measured slower here.
-        return None
-    s = meta["S"]
-    p = meta["pad"]
-    ayoff, axoff = meta["ayoff"], meta["axoff"]
-    ty_size, tx_size = payload["ty_size"], payload["tx_size"]
-    ty_lo, ty_hi, tx_lo, tx_hi = tile_box
-    stored_y, stored_x = meta["stored_tiles"]
-    # Stored-tile range that can owe a strip to any tile in the box (the
-    # same halo-inflated pixel range _slot_rows scans).
-    y_px_lo = ty_lo * ty_size - p + ayoff
-    y_px_hi = min((ty_hi + 1) * ty_size, payload["window"].ysize) + p + ayoff
-    x_px_lo = tx_lo * tx_size - p + axoff
-    x_px_hi = min((tx_hi + 1) * tx_size, payload["window"].xsize) + p + axoff
-    sy_lo = max(y_px_lo // s, 0)
-    sy_hi = min((y_px_hi - 1) // s, stored_y - 1)
-    sx_lo = max(x_px_lo // s, 0)
-    sx_hi = min((x_px_hi - 1) // s, stored_x - 1)
     band = meta["band"]
-    try:
-        part_files = sorted(
-            os.path.join(meta["path"], f)
-            for f in os.listdir(meta["path"])
-            if f.endswith(".parquet")
-        )
-        rows = []
-        for f in part_files:
-            for rg, ymm, xmm, bmm in _footer_stats(f):
-                if bmm is not None and (bmm[1] < band or bmm[0] > band):
-                    continue
-                if ymm is not None and (ymm[1] < sy_lo or ymm[0] > sy_hi):
-                    continue
-                if xmm is not None and (xmm[1] < sx_lo or xmm[0] > sx_hi):
-                    continue
-                rows.append((f, rg, -1, -1))
-    except OSError:
-        return None
-    box = (int(ty_lo), int(ty_hi), int(tx_lo), int(tx_hi))
-    use_rows = rows or [(None, -1, -1, -1)]
-    try:
-        # parallelize slices directly: a createDataFrame + repartition of
-        # this dim-sized list costs an extra exchange stage per call.
-        parallelism = max(spark.sparkContext.defaultParallelism * 2, 1)
-        mdf = spark.createDataFrame(
-            spark.sparkContext.parallelize(
-                use_rows, min(len(use_rows), parallelism)),
-            MANIFEST_SCHEMA,
-        )
-    except Exception:  # pylint: disable=W0703
-        # Spark Connect: no sparkContext — the JVM halo path handles it.
-        return None
+    stored_range = _stored_tile_range(meta, payload, tile_box, meta["pad"])
+    sy_lo, sy_hi, sx_lo, sx_hi = stored_range
+    rows = [(f, rg, -1, -1) for f, rg, _ymm, _xmm
+            in _pruned_row_groups(meta["path"], band, band, stored_range)]
+    mdf = _manifest_df(spark, rows or [(None, -1, -1, -1)])
+    box = tuple(int(v) for v in tile_box)
 
     def extract(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.parquet as pq  # pylint: disable=C0415
-
         out_ty, out_tx, out_struct = [], [], []
         for batch in batches:
-            files = batch.column(0).to_pylist()
-            rgs = batch.column(1).to_pylist()
-            for f, rg in zip(files, rgs):
+            for f, rg in zip(batch.column(0).to_pylist(), batch.column(1).to_pylist()):
                 if f is None:
                     continue
-                st = os.stat(f)
-                fkey = (f, st.st_mtime_ns, st.st_size)
-                pf = _PQ_FILE_CACHE.get(fkey)
-                if pf is None:
-                    if len(_PQ_FILE_CACHE) > 64:
-                        _PQ_FILE_CACHE.clear()
-                    pf = _PQ_FILE_CACHE[fkey] = pq.ParquetFile(f)
-                tbl = pf.read_row_group(
-                    rg, columns=["band", "tile_y", "tile_x",
-                                 "ysize", "xsize", "payload"]
-                )
+                tbl, chunk = _read_row_group(f, rg)
                 b_arr = tbl.column("band").to_numpy()
                 sy_c = tbl.column("tile_y").to_numpy()
                 sx_c = tbl.column("tile_x").to_numpy()
                 sh_c = tbl.column("ysize").to_numpy()
                 sw_c = tbl.column("xsize").to_numpy()
-                pay = tbl.column("payload")
-                if pay.num_chunks != 1:
-                    pay = pay.combine_chunks()
-                chunk = pay.chunk(0) if hasattr(pay, "chunk") else pay
                 for i in range(len(b_arr)):
                     if int(b_arr[i]) != band:
                         continue
@@ -477,137 +496,20 @@ def _halo_strip_bytes(payload: dict, slot: int,
     return n_tiles * frame_px * np.dtype(meta["np_dtype"]).itemsize
 
 
-def _halo_broadcast_max() -> int:
-    """Broadcasting the halo side is only sane while it fits comfortably in
-    every executor: above this budget the plan falls back to strip rows
-    co-located with the body by ONE payload repartition (linear,
-    cluster-safe).  At 100 TB the strips alone are ~1.6% of the raster —
-    terabytes — so the broadcast path must be size-guarded, not assumed.
-    Read per call so tests can force either path."""
-    return int(os.environ.get("YG_HALO_BROADCAST_MAX", str(256 * 1024 * 1024)))
-
-
-
-
-def _interleaved_single_scan(spark: SparkSession, payload: dict,
-                             tile_box: tuple[int, int, int, int]) -> DataFrame | None:
-    """Zero-shuffle plan for multi-channel expressions over ONE interleaved
-    multiband raster table: the table is written sorted (tile_y, tile_x,
-    band) with row groups holding whole tiles, so every band of a tile is
-    guaranteed to land in the same scan task — the kernel's per-partition
-    grouping assembles them with no exchange at all.
-    """
-    metas = payload["slot_meta"]
-    ty_size, tx_size = payload["ty_size"], payload["tx_size"]
-    if len(metas) < 2:
-        return None
-    first = metas[0]
-    for m in metas:
-        aligned = (
-            m["pad"] == 0
-            and m["S"] == ty_size == tx_size
-            and m["ayoff"] % m["S"] == 0
-            and m["axoff"] % m["S"] == 0
-        )
-        if not (m["interleaved"] and aligned and m["path"] == first["path"]
-                and m["ayoff"] == first["ayoff"] and m["axoff"] == first["axoff"]):
-            return None
-    bands = [m["band"] for m in metas]
-    if len(set(bands)) != len(bands):
-        return None
-
-    s = first["S"]
-    ayoff, axoff = first["ayoff"], first["axoff"]
-    ty_lo, ty_hi, tx_lo, tx_hi = tile_box
-    stored_y, stored_x = first["stored_tiles"]
-    sy_lo = max((ty_lo * ty_size + ayoff) // s, 0)
-    sy_hi = min(((ty_hi + 1) * ty_size - 1 + ayoff) // s, stored_y - 1)
-    sx_lo = max((tx_lo * tx_size + axoff) // s, 0)
-    sx_hi = min(((tx_hi + 1) * tx_size - 1 + axoff) // s, stored_x - 1)
-
-    slot_case = "CASE band " + " ".join(
-        f"WHEN {band} THEN {slot}" for slot, band in enumerate(bands)
-    ) + " END"
-    band_list = ", ".join(str(b) for b in bands)
-    rows = (
-        _read_raster_table(spark, first["path"])
-        .where(
-            f"band IN ({band_list}) AND tile_y BETWEEN {int(sy_lo)} AND {int(sy_hi)} "
-            f"AND tile_x BETWEEN {int(sx_lo)} AND {int(sx_hi)}"
-        )
-        .selectExpr(
-            f"CAST((CAST(tile_y AS BIGINT) * {s} - {ayoff}) / {ty_size} AS INT) AS ty",
-            f"CAST((CAST(tile_x AS BIGINT) * {s} - {axoff}) / {tx_size} AS INT) AS tx",
-            f"struct(CAST({slot_case} AS INT) AS slot, "
-            f"CAST(tile_y AS BIGINT) * {s} AS py0, "
-            f"CAST(tile_x AS BIGINT) * {s} AS px0, ysize AS sh, xsize AS sw, "
-            f"payload AS p) AS piece",
-        )
-        .where(f"ty BETWEEN {ty_lo} AND {ty_hi} AND tx BETWEEN {tx_lo} AND {tx_hi}")
-    )
-    if all(m["dense"] for m in metas):
-        # Dense table: the stored grid's coverage is a closed-form rectangle,
-        # so out-of-extent tiles come from a predicate on the generated grid
-        # — no key scan, no anti-join.
-        off_y, off_x = ayoff // s, axoff // s
-        c_ty_lo, c_ty_hi = -off_y, stored_y - 1 - off_y
-        c_tx_lo, c_tx_hi = -off_x, stored_x - 1 - off_x
-        if c_ty_lo <= ty_lo and ty_hi <= c_ty_hi and c_tx_lo <= tx_lo and tx_hi <= c_tx_hi:
-            return rows
-        missing = _base_grid(spark, payload, tile_box).where(
-            f"NOT (ty BETWEEN {c_ty_lo} AND {c_ty_hi} "
-            f"AND tx BETWEEN {c_tx_lo} AND {c_tx_hi})"
-        )
-    else:
-        # Sparse table (zero tiles dropped at write): only a key scan knows
-        # which tiles exist; anti-join the pruned key columns.
-        present = rows.select("ty", "tx").distinct()
-        missing = _base_grid(spark, payload, tile_box).join(
-            present, ["ty", "tx"], "left_anti"
-        )
-    return rows.unionByName(
-        missing.selectExpr("ty", "tx", f"CAST(NULL AS {PIECE_STRUCT_SQL}) AS piece")
-    )
-
-
-MANIFEST_SCHEMA = "file string, rg int, mty int, mtx int"
-
-# Footer statistics cache: repeated terminal actions over the same raster
-# (every bench/production loop) must not re-read every parquet footer on the
-# driver.  Keyed by (file, mtime); entries are (row_group, (ty_min, ty_max),
-# (tx_min, tx_max)) with None when the writer recorded no statistics.
-_FOOTER_CACHE: dict[tuple[str, float], list] = {}
-
-
-def _footer_cache_put(key: tuple[str, float], value: list) -> None:
-    # FIFO size bound — must run on EVERY insertion point (the manifest-hit
-    # branch previously skipped it, so long-lived sessions touching many
-    # distinct files/mtimes grew the driver cache unboundedly).
-    while len(_FOOTER_CACHE) >= 4096:
-        _FOOTER_CACHE.pop(next(iter(_FOOTER_CACHE)))
-    _FOOTER_CACHE[key] = value
-
-
-def _footer_stats(path: str) -> list:
-    key = (path, os.stat(path).st_mtime)
-    got = _FOOTER_CACHE.get(key)
-    if got is None:
-        # Prefer the save-time manifest: one JSON fetch for the whole table
-        # instead of a footer read per file (the scale path for tables with
-        # many part files on object storage).
-        from ..sources.parquet import (  # pylint: disable=C0415
-            read_tile_manifest,
-            row_group_tile_stats,
-        )
-
-        manifest = read_tile_manifest(os.path.dirname(path))
-        if manifest is not None and os.path.basename(path) in manifest:
-            got = manifest[os.path.basename(path)]
-            _footer_cache_put(key, got)
-            return got
-        got = row_group_tile_stats(path)
-        _footer_cache_put(key, got)
-    return got
+def _halo_map(spark: SparkSession, payload: dict,
+              tile_box: tuple[int, int, int, int]) -> dict:
+    """The single stencil leaf's halo strips, collected once to the driver
+    as {(ty, tx): [(slot, py0, px0, sh, sw, bytes)]}: they ride to workers
+    inside the payload broadcast and the kernel merges them at assembly.
+    Arrow moves these thousands of small binary pieces in tens of ms where
+    the py4j row path measured 0.68 s."""
+    cols = ("ty", "tx", "slot", "py0", "px0", "sh", "sw", "p")
+    tbl = _halo_strips(spark, payload, 0, tile_box).select(
+        "ty", "tx", *(f"piece.{c}" for c in cols[2:])).toArrow()
+    halo_map: dict = {}
+    for ty, tx, *piece in zip(*(tbl.column(c).to_pylist() for c in cols)):
+        halo_map.setdefault((ty, tx), []).append(tuple(piece))
+    return halo_map
 
 
 def _manifest_rows(spark: SparkSession, payload: dict,
@@ -618,27 +520,20 @@ def _manifest_rows(spark: SparkSession, payload: dict,
     JVM's payload decode AND the JVM->Arrow re-conversion — the two largest
     CPU+GC costs of payload-heavy scans (measured ~2x the kernel itself).
 
-    Eligible when every leaf is the SAME parquet table on an aligned grid
-    with no stencil padding and dense coverage; multi-band requires the
-    interleaved layout (whole tiles per row group by construction).  Returns
+    Eligible when every leaf is on an aligned grid with dense coverage and
+    no stencil padding (``allow_pad`` lifts that last condition; the caller
+    then supplies the halo), on the SAME stored grid.  Leaves of one table
+    must be distinct bands, and several bands need the interleaved layout
+    (whole tiles per row group by construction); leaves of distinct tables
+    must list identical row-group tile ranges (the planar form).  The body
+    reads only the row groups of the unpadded tile range.  Returns
     (manifest_meta, DataFrame) or None.
     """
-    if os.environ.get("YG_MANIFEST_SCAN", "1") != "1":
-        return None
     metas = payload["slot_meta"]
-    ty_size, tx_size = payload["ty_size"], payload["tx_size"]
-    if not metas:
-        return None
     first = metas[0]
     for m in metas:
-        aligned = (
-            (m["pad"] == 0 or allow_pad)
-            and m["dense"]
-            and m["S"] == ty_size == tx_size
-            and m["ayoff"] % m["S"] == 0
-            and m["axoff"] % m["S"] == 0
-        )
-        if not (aligned
+        if not ((m["pad"] == 0 or allow_pad) and m["dense"]
+                and _aligned_geom(m, payload)
                 and m["ayoff"] == first["ayoff"] and m["axoff"] == first["axoff"]
                 and m["stored_tiles"] == first["stored_tiles"]):
             return None
@@ -663,49 +558,21 @@ def _manifest_rows(spark: SparkSession, payload: dict,
     ayoff, axoff = first["ayoff"], first["axoff"]
     ty_lo, ty_hi, tx_lo, tx_hi = tile_box
     stored_y, stored_x = first["stored_tiles"]
-    sy_lo = max((ty_lo * ty_size + ayoff) // s, 0)
-    sy_hi = min(((ty_hi + 1) * ty_size - 1 + ayoff) // s, stored_y - 1)
-    sx_lo = max(((tx_lo) * tx_size + axoff) // s, 0)
-    sx_hi = min(((tx_hi + 1) * tx_size - 1 + axoff) // s, stored_x - 1)
-
-    def pruned_stats(path: str, band_lo: int, band_hi: int):
-        part_files = sorted(
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.endswith(".parquet")
-        )
-        out = []
-        for f in part_files:
-            for rg, ymm, xmm, bmm in _footer_stats(f):
-                # Band pruning: non-interleaved multiband tables are
-                # band-pure per file, so a single-band query drops the
-                # other bands' row groups entirely instead of decoding
-                # their payloads only to discard every row kernel-side.
-                if bmm is not None and (bmm[1] < band_lo or bmm[0] > band_hi):
-                    continue
-                if ymm is not None and (ymm[1] < sy_lo or ymm[0] > sy_hi):
-                    continue
-                if xmm is not None and (xmm[1] < sx_lo or xmm[0] > sx_hi):
-                    continue
-                out.append((f, rg, ymm, xmm))
-        return out
+    stored_range = _stored_tile_range(first, payload, tile_box, 0)
 
     if same_path:
-        stats = pruned_stats(first["path"], min(bands), max(bands))
+        stats = _pruned_row_groups(first["path"], min(bands), max(bands), stored_range)
         rows = [(f, rg, -1, -1) for f, rg, _ymm, _xmm in stats]
         file_slots = {"*": [(int(b), i) for i, b in enumerate(bands)]}
-        group_partitioned = False
     else:
         # One stats pass per distinct table; all leaves must expose
         # IDENTICAL ordered (rg, tile-range) sequences (our writer is
         # deterministic, so per-channel tables of one grid do) — then
         # row group i of every table holds the same tile run and tagging
         # rows with the sequence index as a partitioning key co-locates
-        # them.  Any divergence falls back to the JVM plans.
-        per_slot = []
-        for m in metas:
-            st = pruned_stats(m["path"], m["band"], m["band"])
-            per_slot.append(st)
+        # them.  Any divergence falls back to the general plan.
+        per_slot = [_pruned_row_groups(m["path"], m["band"], m["band"], stored_range)
+                    for m in metas]
         shape0 = [(rg, ymm, xmm) for _f, rg, ymm, xmm in per_slot[0]]
         for st in per_slot[1:]:
             if [(rg, ymm, xmm) for _f, rg, ymm, xmm in st] != shape0:
@@ -719,7 +586,6 @@ def _manifest_rows(spark: SparkSession, payload: dict,
             for gi, (f, rg, _ymm, _xmm) in enumerate(st):
                 rows.append((f, rg, gi, -1))
                 file_slots.setdefault(f, []).append((band, slot))
-        group_partitioned = True
 
     # Tiles outside stored coverage still exist as zeros (closed form).
     off_y, off_x = ayoff // s, axoff // s
@@ -736,42 +602,19 @@ def _manifest_rows(spark: SparkSession, payload: dict,
         "s": int(s), "ayoff": int(ayoff), "axoff": int(axoff),
         "box": tuple(int(v) for v in tile_box),
     }
-    parallelism = max(spark.sparkContext.defaultParallelism * 2, 1)
-    if group_partitioned:
-        # All slots of a tile run must share a task (the kernel assembles
-        # a tile from consecutive rows of one partition), so the rows are
-        # parallelized GROUP-ATOMICALLY: one list element per sequence
-        # index, spread round-robin over even slices.  A hash repartition
-        # on the index measured ~37% empty partitions (balls-in-bins) and
-        # 2-3-group stragglers — visible as a save_tiles/aoh regression.
-        n_groups = len(shape0) if shape0 else 1
-        by_group: dict[int, list] = {}
-        for row in rows:
-            by_group.setdefault(row[2], []).append(row)
-        elements = list(by_group.values()) + [[m] for m in missing]
-        try:
-            rdd = spark.sparkContext.parallelize(
-                elements, min(len(elements), parallelism)
-            ).flatMap(lambda g: g)
-            mdf = spark.createDataFrame(rdd, MANIFEST_SCHEMA)
-        except Exception:  # pylint: disable=W0703
-            # Spark Connect: no sparkContext — hash partitioning keeps
-            # correctness (groups still co-locate), only balance suffers.
-            mdf = spark.createDataFrame(rows + missing, MANIFEST_SCHEMA)
-            mdf = mdf.repartition(min(max(n_groups, 1), parallelism), "mty")
-        return meta, mdf
-    rows = rows + missing
-    try:
-        mdf = spark.createDataFrame(
-            spark.sparkContext.parallelize(rows, min(len(rows), parallelism)),
-            MANIFEST_SCHEMA,
-        )
-    except Exception:  # pylint: disable=W0703
-        # Spark Connect: no sparkContext.
-        mdf = spark.createDataFrame(rows, MANIFEST_SCHEMA)
-        if len(rows) > 1:
-            mdf = mdf.repartition(min(len(rows), parallelism))
-    return meta, mdf
+    if same_path:
+        return meta, _manifest_df(spark, rows + missing)
+    # All slots of a tile run must share a task (the kernel assembles a tile
+    # from consecutive rows of one partition), so the rows are parallelized
+    # GROUP-ATOMICALLY: one list element per sequence index, spread
+    # round-robin over even slices.  A hash repartition on the index
+    # measured ~37% empty partitions (balls-in-bins) and 2-3-group
+    # stragglers — visible as a save_tiles/aoh regression.
+    by_group: dict[int, list] = {}
+    for row in rows:
+        by_group.setdefault(row[2], []).append(row)
+    groups = list(by_group.values()) + [[m] for m in missing]
+    return meta, _manifest_df(spark, groups, grouped=True)
 
 
 def _missing_grid(spark: SparkSession, payload: dict,
@@ -812,22 +655,32 @@ def _base_grid(spark: SparkSession, payload: dict,
 
 
 def _build(tree, spark: SparkSession | None, sub_window: Window | None = None):
-    """Assemble the tile DataFrame: one row per (tile, piece), unioned across
-    slots, co-located per tile by a repartition on tile coords and made
-    adjacent by a partition-local sort; the kernel groups consecutive rows.
+    """Plan the scan the kernel consumes.  Exactly three outcomes:
 
-    Design notes (measured, not guessed):
+    1. **No parquet leaf** — the bare tile grid, one row per tile with a
+       NULL piece; every input ships inside the payload broadcast.
+    2. **Manifest** (``_manifest_rows``) — every leaf is an aligned dense
+       table on one stored grid: (file, row-group) rows that the kernel
+       decodes with pyarrow itself, no shuffle.  A single stencil leaf takes
+       it too while its halo strips fit ``HALO_BROADCAST_MAX``; the strips
+       are collected once and ride in the payload broadcast.
+    3. **General fallback** — one row per (tile, piece) from each leaf's JVM
+       scan (``_slot_rows``), unioned with the tiles no leaf covers (NULL
+       piece) and co-located per tile by a repartition on tile coords; the
+       kernel groups rows hash-side.
+
+    Design notes for the fallback (measured, not guessed):
     * No joins: an outer join of the tile grid against big piece rows tempts
       Catalyst into broadcasting the piece side (outer joins can only build
       the non-preserved side), and pairwise leaf joins shuffle every leaf
       per join.
     * No collect_list: ObjectHashAggregate over multi-megabyte binaries is an
       order of magnitude slower than shuffle+sort of the same rows.
-    * Tiles no leaf covers are appended driver-side from the coverage
-      complement (rectangular extents make it a closed-form predicate), with
-      a NULL piece.
-    * A single aligned dense leaf skips the shuffle entirely: its scan is
-      already one row per tile.
+    * No partition-local sort: sorting multi-megabyte rows thrashes
+      Tungsten's record sorter (measured 35 s vs 3 s for the bare shuffle).
+    * A single aligned leaf (sparse, or the manifest cannot take it) skips
+      the repartition: its scan is already one row per tile, and the
+      missing-tile rows use keys no stored row has.
     """
     spark = get_spark(spark)
     root = _as_root(tree)
@@ -844,192 +697,37 @@ def _build(tree, spark: SparkSession | None, sub_window: Window | None = None):
             min((sub_window.xmax - 1) // tx_size, payload["tiles_x"] - 1),
         )
 
-    n_slots = len(payload["slot_meta"])
-    if n_slots == 0:
-        df = _base_grid(spark, payload, tile_box).selectExpr(
-            "ty", "tx", f"CAST(NULL AS {PIECE_STRUCT_SQL}) AS piece"
-        )
-    else:
-        from functools import reduce
+    metas = payload["slot_meta"]
+    null_piece = f"CAST(NULL AS {PIECE_STRUCT_SQL}) AS piece"
+    if not metas:
+        df = _base_grid(spark, payload, tile_box).selectExpr("ty", "tx", null_piece)
+        return spark, root, payload, spark.sparkContext.broadcast(payload), df
 
-        manifest = _manifest_rows(spark, payload, tile_box)
-        if manifest is not None:
-            payload["manifest"] = manifest[0]
-            if n_slots > 1:
-                payload["expect_all_slots"] = True
-            bc = spark.sparkContext.broadcast(payload)
-            return spark, root, payload, bc, manifest[1]
-
-        single_scan = _interleaved_single_scan(spark, payload, tile_box)
-        if single_scan is not None:
-            # Correctness guard: this plan relies on every band of a stored
-            # tile landing in one scan task (whole-row-group splits over the
-            # interleaved sort).  The kernel verifies slot completeness.
+    halo = (len(metas) == 1 and metas[0]["pad"] > 0
+            and _aligned_geom(metas[0], payload)
+            and _halo_strip_bytes(payload, 0, tile_box) <= HALO_BROADCAST_MAX)
+    manifest = _manifest_rows(spark, payload, tile_box, allow_pad=halo)
+    if manifest is not None:
+        payload["manifest"], df = manifest
+        if len(metas) > 1:
             payload["expect_all_slots"] = True
-            bc = spark.sparkContext.broadcast(payload)
-            return spark, root, payload, bc, single_scan
+        if halo:
+            payload["halo_pieces"] = _halo_map(spark, payload, tile_box)
+        return spark, root, payload, spark.sparkContext.broadcast(payload), df
 
-        if n_slots == 1:
-            rows, aligned, cov, src = _slot_rows(spark, payload, 0, tile_box, body_only=True)
-            pad = payload["slot_meta"][0]["pad"]
-            aligned_geom = (
-                payload["slot_meta"][0]["S"] == payload["ty_size"] == payload["tx_size"]
-                and payload["slot_meta"][0]["ayoff"] % payload["slot_meta"][0]["S"] == 0
-                and payload["slot_meta"][0]["axoff"] % payload["slot_meta"][0]["S"] == 0
-            )
-            if pad > 0 and aligned_geom and \
-                    _halo_strip_bytes(payload, 0, tile_box) <= _halo_broadcast_max():
-                # Stencil queries on an aligned dense leaf: the BODY can
-                # still use the pyarrow-direct manifest scan (C++ decode,
-                # no JVM payload transfer) when the halo strips fit the
-                # broadcast budget — the strips job collects its few KB
-                # per tile to the driver (the same bytes the broadcast
-                # hash join built there before) and rides to workers
-                # inside the payload broadcast; the kernel merges them at
-                # assembly.  Falls through to the JVM body scan + halo
-                # join below when the table cannot be footer-listed.
-                man_pad = _manifest_rows(spark, payload, tile_box,
-                                         allow_pad=True)
-                if man_pad is not None:
-                    strips_df = _halo_strips_direct(spark, payload, 0, tile_box)
-                    if strips_df is None:
-                        strips_df = _halo_strips(spark, payload, 0, tile_box, src)
-                    flat = strips_df.select(
-                        "ty", "tx", "piece.slot", "piece.py0", "piece.px0",
-                        "piece.sh", "piece.sw", "piece.p")
-                    halo_map: dict = {}
-                    try:
-                        # Arrow transfer: the strip rows are thousands of
-                        # small binary pieces, and the py4j row path
-                        # measured 0.68s where Arrow moves the same ~MBs
-                        # in tens of ms.
-                        prev = spark.conf.get(
-                            "spark.sql.execution.arrow.pyspark.enabled", None)
-                        spark.conf.set(
-                            "spark.sql.execution.arrow.pyspark.enabled", "true")
-                        try:
-                            pdf = flat.toPandas()
-                        finally:
-                            if prev is None:
-                                spark.conf.unset(
-                                    "spark.sql.execution.arrow.pyspark.enabled")
-                            else:
-                                spark.conf.set(
-                                    "spark.sql.execution.arrow.pyspark.enabled",
-                                    prev)
-                        rows_it = zip(
-                            pdf["ty"].to_numpy(), pdf["tx"].to_numpy(),
-                            pdf["slot"].to_numpy(), pdf["py0"].to_numpy(),
-                            pdf["px0"].to_numpy(), pdf["sh"].to_numpy(),
-                            pdf["sw"].to_numpy(), pdf["p"],
-                        )
-                        for ty_v, tx_v, sl, py0, px0, sh, sw, p in rows_it:
-                            halo_map.setdefault((int(ty_v), int(tx_v)), []).append(
-                                (int(sl), int(py0), int(px0), int(sh), int(sw),
-                                 bytes(p)))
-                    except Exception:  # pylint: disable=W0703
-                        halo_map = {}
-                        for r in strips_df.collect():
-                            piece = r["piece"]
-                            halo_map.setdefault((r["ty"], r["tx"]), []).append(
-                                (piece["slot"], piece["py0"], piece["px0"],
-                                 piece["sh"], piece["sw"], bytes(piece["p"]))
-                            )
-                    payload["manifest"] = man_pad[0]
-                    payload["halo_pieces"] = halo_map
-                    bc = spark.sparkContext.broadcast(payload)
-                    return spark, root, payload, bc, man_pad[1]
-            if aligned:
-                # Body rows are already one per tile — zero shuffles.  A
-                # stencil halo rides in as broadcast strips (halo exchange)
-                # while the strip volume fits the broadcast budget; above it
-                # (planet-scale stencils) the strips become ordinary piece
-                # rows co-located with the body by one payload repartition —
-                # linear and cluster-safe, never a giant broadcast.
-                # Tiles with no stored row still exist as zeros.  Dense
-                # tables (the default) have closed-form rectangular coverage
-                # -> predicate on the generated grid, no extra scan; sparse
-                # tables need the key-only anti-join.  The missing rows
-                # union in BEFORE the halo attaches: a tile outside stored
-                # coverage still receives its neighbours' strips (its core
-                # is zeros, but a stencil overlapping the coverage edge
-                # reads real neighbour pixels — dropping them produced
-                # zeroed borders one tile outside the data).
-                df = rows.select("ty", "tx", "piece")
-                # The coverage rect from _slot_rows is PAD-INFLATED (tiles
-                # the leaf can reach via halo); the missing grid must use
-                # the UNPADDED body coverage, or tiles just outside stored
-                # data get no row at all and their neighbour strips vanish
-                # (zeroed stencil borders one tile outside the data — the
-                # bug the local-oracle differential caught).
-                meta0 = payload["slot_meta"][0]
-                tys, txs = payload["ty_size"], payload["tx_size"]
-                cov_body = (
-                    max(tile_box[0], (-meta0["ayoff"] - tys) // tys + 1),
-                    min(tile_box[1],
-                        (-meta0["ayoff"] + meta0["leaf_h"] - 1) // tys),
-                    max(tile_box[2], (-meta0["axoff"] - txs) // txs + 1),
-                    min(tile_box[3],
-                        (-meta0["axoff"] + meta0["leaf_w"] - 1) // txs),
-                )
-                missing = _missing_grid(spark, payload, tile_box, [cov_body],
-                                        rows if not payload["slot_meta"][0]["dense"] else None)
-                if missing is not None:
-                    df = df.unionByName(missing.selectExpr(
-                        "ty", "tx", f"CAST(NULL AS {PIECE_STRUCT_SQL}) AS piece"
-                    ))
-                if pad > 0:
-                    strips = _halo_strips_direct(spark, payload, 0, tile_box)
-                    if strips is None:
-                        strips = _halo_strips(spark, payload, 0, tile_box, src)
-                    if _halo_strip_bytes(payload, 0, tile_box) <= _halo_broadcast_max():
-                        halo = strips.groupBy("ty", "tx").agg(
-                            F.collect_list("piece").alias("halo")
-                        )
-                        df = df.join(F.broadcast(halo), ["ty", "tx"], "left")
-                    else:
-                        df = df.unionByName(strips).repartition(
-                            F.col("ty"), F.col("tx")
-                        )
-                else:
-                    df = df.selectExpr(
-                        "ty", "tx", "piece",
-                        f"CAST(NULL AS array<{PIECE_STRUCT_SQL}>) AS halo",
-                    )
-                bc = spark.sparkContext.broadcast(payload)
-                return spark, root, payload, bc, df
-
-        if n_slots == 1:
-            # Unaligned single leaf: the body_only plan above IS the general
-            # plan (body_only only matters on aligned geometry) — reuse it
-            # instead of rebuilding the scan + selectExpr chain.
-            slot_rows = [rows]
-            covs = [cov]
-        else:
-            slot_rows = []
-            covs = []
-            for slot in range(n_slots):
-                rows, aligned, cov, _src = _slot_rows(spark, payload, slot, tile_box)
-                slot_rows.append(rows)
-                covs.append(cov)
-
-        df = reduce(lambda a, b: a.unionByName(b), slot_rows)
-        # Tiles no leaf stores a row for still exist as zeros (see above).
-        all_dense = all(m["dense"] for m in payload["slot_meta"])
-        missing = _missing_grid(spark, payload, tile_box, covs,
-                                None if all_dense else df)
-        if missing is not None:
-            df = df.unionByName(
-                missing.selectExpr("ty", "tx", f"CAST(NULL AS {PIECE_STRUCT_SQL}) AS piece")
-            )
-        # Repartition only — co-location is enough.  (A partition-local
-        # sort of multi-megabyte rows thrashes Tungsten's record sorter:
-        # measured 35 s vs 3 s for the bare shuffle; the kernel groups
-        # rows hash-side instead.)
+    slot_rows, covs = [], []
+    for slot in range(len(metas)):
+        rows, aligned, cov = _slot_rows(spark, payload, slot, tile_box)
+        slot_rows.append(rows)
+        covs.append(cov)
+    df = reduce(lambda a, b: a.unionByName(b), slot_rows)
+    all_dense = all(m["dense"] for m in metas)
+    missing = _missing_grid(spark, payload, tile_box, covs, None if all_dense else df)
+    if missing is not None:
+        df = df.unionByName(missing.selectExpr("ty", "tx", null_piece))
+    if not (len(metas) == 1 and aligned):
         df = df.repartition(F.col("ty"), F.col("tx"))
-
-    bc = spark.sparkContext.broadcast(payload)
-    return spark, root, payload, bc, df
+    return spark, root, payload, spark.sparkContext.broadcast(payload), df
 
 
 def _assemble_slot(meta: dict, pieces, y0: int, x0: int, h: int, w: int):
@@ -1060,13 +758,6 @@ def _assemble_slot(meta: dict, pieces, y0: int, x0: int, h: int, w: int):
     return out, (oy, ox)
 
 
-# Keyed by (path, mtime_ns, size), NOT path alone: an overwrite that reuses
-# the file name would otherwise keep serving the DELETED inode through the
-# cached open handle — stale reads that depend on which worker gets the task
-# (caught as a flaky overwrite-loop test; one os.stat per row group is noise
-# next to the footer parse the cache avoids).
-_PQ_FILE_CACHE: dict[tuple, Any] = {}
-
 # Per-stage worker timing for scaling diagnosis (scripts/diag_aoh.py): when
 # YG_STAGE_TIMING names a path prefix, each Python worker appends its
 # accumulated decode/kernel seconds there per partition.  Zero overhead when
@@ -1088,8 +779,6 @@ def _manifest_pieces(batch: pa.RecordBatch, man: dict, payload: dict,
                      groups: dict, retained: list) -> None:
     """Manifest-mode piece collection: the worker reads its (file, row-group)
     assignments directly with pyarrow (C++ decode, zero JVM bytes)."""
-    import pyarrow.parquet as pq  # pylint: disable=C0415
-
     n_slots = len(payload["slot_meta"])
     file_slots = man["file_slots"]
     shared_slots = file_slots.get("*")  # same-table form: one band->slot map
@@ -1106,27 +795,13 @@ def _manifest_pieces(batch: pa.RecordBatch, man: dict, payload: dict,
             continue
         band_slot = dict(shared_slots if shared_slots is not None
                          else file_slots[f])
-        st = os.stat(f)
-        fkey = (f, st.st_mtime_ns, st.st_size)
-        pf = _PQ_FILE_CACHE.get(fkey)
-        if pf is None:
-            if len(_PQ_FILE_CACHE) > 64:
-                _PQ_FILE_CACHE.clear()
-            pf = _PQ_FILE_CACHE[fkey] = pq.ParquetFile(f)
-        tbl = pf.read_row_group(
-            rg, columns=["band", "tile_y", "tile_x", "ysize", "xsize", "payload"]
-        )
-        retained.append(tbl)
+        tbl, chunk = _read_row_group(f, rg)
+        retained.append((tbl, chunk))
         b_arr = tbl.column("band").to_numpy()
         sy = tbl.column("tile_y").to_numpy()
         sx = tbl.column("tile_x").to_numpy()
         sh = tbl.column("ysize").to_numpy()
         sw = tbl.column("xsize").to_numpy()
-        pay = tbl.column("payload")
-        if pay.num_chunks != 1:
-            pay = pay.combine_chunks()
-            retained.append(pay)
-        chunk = pay.chunk(0) if hasattr(pay, "chunk") else pay
         for j in range(len(b_arr)):
             slot = band_slot.get(int(b_arr[j]))
             if slot is None:
@@ -1157,11 +832,6 @@ def _tile_results(bc, batch_iter: Iterator[pa.RecordBatch]):
     from ..sources import parquet as pq_raster  # pylint: disable=C0415
 
     payload = bc.value
-    ty_size, tx_size = payload["ty_size"], payload["tx_size"]
-    window = payload["window"]
-    slot_meta = payload["slot_meta"]
-    n_slots = len(slot_meta)
-    tree = payload["tree"]
     # Task-scoped ranged-read cache: kernel-side mosaic fetches of this
     # task's contiguous tile run reuse decoded row groups (nothing survives
     # the task — see parquet.push_read_scope).
@@ -1191,7 +861,7 @@ def _tile_results_scoped(payload, batch_iter: Iterator[pa.RecordBatch]):
             filled = [bool(p) for p in pieces_by_slot]
             if any(filled) and not all(filled):
                 raise RuntimeError(
-                    f"interleaved single-scan tile ({ty},{tx}) received only "
+                    f"manifest tile ({ty},{tx}) received only "
                     f"{sum(filled)}/{len(filled)} band slots — stored tile "
                     "split across scan tasks (row-group/tile alignment broken)"
                 )
@@ -1233,7 +903,6 @@ def _tile_results_scoped(payload, batch_iter: Iterator[pa.RecordBatch]):
             continue
         ty_col = batch.column(batch.schema.get_field_index("ty")).to_numpy()
         tx_col = batch.column(batch.schema.get_field_index("tx")).to_numpy()
-        has_halo = batch.schema.get_field_index("halo") != -1
         if n_slots:
             col = batch.column(batch.schema.get_field_index("piece"))
             nulls = col.is_null().to_numpy(zero_copy_only=False)
@@ -1243,17 +912,6 @@ def _tile_results_scoped(payload, batch_iter: Iterator[pa.RecordBatch]):
             sh_a = col.field("sh").to_numpy(zero_copy_only=False)
             sw_a = col.field("sw").to_numpy(zero_copy_only=False)
             p_arr = col.field("p")
-            if has_halo:
-                hcol = batch.column(batch.schema.get_field_index("halo"))
-                h_nulls = hcol.is_null().to_numpy(zero_copy_only=False)
-                h_offsets = hcol.offsets.to_numpy(zero_copy_only=False)
-                h_values = hcol.flatten()
-                h_slot = h_values.field("slot").to_numpy(zero_copy_only=False)
-                h_py0 = h_values.field("py0").to_numpy(zero_copy_only=False)
-                h_px0 = h_values.field("px0").to_numpy(zero_copy_only=False)
-                h_sh = h_values.field("sh").to_numpy(zero_copy_only=False)
-                h_sw = h_values.field("sw").to_numpy(zero_copy_only=False)
-                h_p = h_values.field("p")
         for i in range(batch.num_rows):
             key = (int(ty_col[i]), int(tx_col[i]))
             slots_acc = groups.get(key)
@@ -1268,15 +926,6 @@ def _tile_results_scoped(payload, batch_iter: Iterator[pa.RecordBatch]):
                         memoryview(p_arr[i].as_buffer()),
                     )
                 )
-            if n_slots and has_halo and not h_nulls[i]:
-                for j in range(int(h_offsets[i]), int(h_offsets[i + 1])):
-                    slots_acc[int(h_slot[j])].append(
-                        (
-                            int(h_py0[j]), int(h_px0[j]),
-                            int(h_sh[j]), int(h_sw[j]),
-                            memoryview(h_p[j].as_buffer()),
-                        )
-                    )
     if timing is None:
         for (ty, tx), slots_acc in groups.items():
             yield evaluate(ty, tx, slots_acc)

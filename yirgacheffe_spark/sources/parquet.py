@@ -437,7 +437,7 @@ def write_multiband_interleaved(
     """Write several bands as ONE tile table sorted (tile_y, tile_x, band)
     with row groups aligned to whole tiles, so every band of a tile lands in
     the same scan task — multi-channel expressions then need no shuffle at
-    all (see the single-scan path in ``plans/executor.py``).
+    all (see the manifest scan, ``_manifest_rows`` in ``plans/executor.py``).
     """
     import pyarrow as pa  # pylint: disable=C0415
     import pyarrow.parquet as pq  # pylint: disable=C0415
