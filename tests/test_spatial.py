@@ -789,12 +789,14 @@ def test_asof_string_tiebreak_keeps_own_type(spark):
         assert out[0]["r_px"] == 3.0  # max string seq wins on every layout
 
 
-def test_knn_exact_even_with_tiny_max_ring(spark):
+@pytest.mark.parametrize("res", [6, 10])
+def test_knn_exact_even_with_tiny_max_ring(spark, res):
     """max_ring bounds only the cheap cell-disk search, never correctness:
     when the disk cannot certify the k nearest (sparse corner data, tiny
     max_ring), the unverifiable queries fall through to an exact pass.  The
     old force-settle at max_ring returned disk-corner pages as 'nearest'
-    and silently DROPPED queries whose disk was empty."""
+    and silently DROPPED queries whose disk was empty.  At res 10 the pass
+    runs over the res-8 parent-cell histogram."""
     import pandas as pd
 
     from yirgacheffe_spark.spatial import joins
@@ -808,12 +810,12 @@ def test_knn_exact_even_with_tiny_max_ring(spark):
     from yirgacheffe_spark.spatial import cells as ci
     import numpy as np
 
-    pages = pages.withColumn("cell", joins.cell_expr("lat", "lng", 6))
+    pages = pages.withColumn("cell", joins.cell_expr("lat", "lng", res))
     queries = [
         {"query_id": 1, "lat": 0.0, "lng": 0.0},     # empty disk at ring 1
         {"query_id": 2, "lat": -30.0, "lng": 140.0}, # nearer to the -35 cluster
     ]
-    out = joins.knn_join(spark, pages, queries, k=2, res=6, max_ring=1).collect()
+    out = joins.knn_join(spark, pages, queries, k=2, res=res, max_ring=1).collect()
     by_q = {}
     for r in out:
         by_q.setdefault(r.query_id, []).append(r)
@@ -828,7 +830,8 @@ def test_knn_exact_even_with_tiny_max_ring(spark):
         assert got == want, (q, got, want)
 
 
-def test_knn_k_larger_than_table(spark):
+@pytest.mark.parametrize("res", [6, 10])
+def test_knn_k_larger_than_table(spark, res):
     """k exceeding the table's row count returns every row, exactly — the
     histogram-pruned final pass must not drop any nonempty cell when the
     whole table is smaller than k."""
@@ -840,10 +843,10 @@ def test_knn_k_larger_than_table(spark):
         "url": ["a", "b", "c"],
         "lat": [40.0, -35.0, 10.0],
         "lng": [10.0, 150.0, -60.0],
-    })).withColumn("cell", joins.cell_expr("lat", "lng", 6))
+    })).withColumn("cell", joins.cell_expr("lat", "lng", res))
     out = joins.knn_join(
         spark, pages, [{"query_id": 1, "lat": 0.0, "lng": 0.0}],
-        k=10, res=6, max_ring=1).collect()
+        k=10, res=res, max_ring=1).collect()
     assert {r.url for r in out} == {"a", "b", "c"}
 
 
@@ -860,7 +863,8 @@ def test_knn_empty_query_list(spark):
     assert set(out.columns) == {"query_id", "url", "dist_m", "rank"}
 
 
-def test_knn_polar_exact(spark):
+@pytest.mark.parametrize("res", [6, 10])
+def test_knn_polar_exact(spark, res):
     """Polar regression for the histogram pass's per-cell distance UPPER
     bound: the parallel leg must use the cos that MAXIMIZES it over the
     cell's latitude range (1.0 across the equator), not cos(far_lat) —
@@ -872,9 +876,10 @@ def test_knn_polar_exact(spark):
 
     from yirgacheffe_spark.spatial import joins
 
-    # Pages ONLY in the pole-adjacent rows (row 0 and row 63 at res 6),
-    # spread over longitudes including across the antimeridian; every
-    # query's ring-1 disk is empty -> all take the histogram fallback.
+    # Pages ONLY in the pole-adjacent rows (row 0 and row 63 at res 6; at
+    # res 10 their res-8 parents are), spread over longitudes including
+    # across the antimeridian; every query's ring-1 disk is empty -> all
+    # take the histogram fallback.
     lngs = np.arange(-175.0, 180.0, 10.0)
     lat_n = np.full(len(lngs), 89.3)
     lat_s = np.full(len(lngs), -89.3)
@@ -885,7 +890,7 @@ def test_knn_polar_exact(spark):
         "lng": np.concatenate([lngs, lngs]),
     })
     pages = spark.createDataFrame(pdf).withColumn(
-        "cell", joins.cell_expr("lat", "lng", 6))
+        "cell", joins.cell_expr("lat", "lng", res))
     queries = [
         {"query_id": 1, "lat": 40.0, "lng": 179.0},
         {"query_id": 2, "lat": 40.0, "lng": -179.0},
@@ -893,7 +898,7 @@ def test_knn_polar_exact(spark):
         {"query_id": 4, "lat": 0.0, "lng": -91.0},
         {"query_id": 5, "lat": 75.0, "lng": 13.0},
     ]
-    out = joins.knn_join(spark, pages, queries, k=3, res=6,
+    out = joins.knn_join(spark, pages, queries, k=3, res=res,
                          max_ring=1).collect()
     by_q = {}
     for r in out:
@@ -908,6 +913,14 @@ def test_knn_polar_exact(spark):
         got = [r.url for r in sorted(by_q[q["query_id"]],
                                      key=lambda r: r.rank)]
         assert got == want, (q, got, want)
+
+
+def test_knn_polar_pinned_ub_regression(spark):
+    """The res-6 half of the polar regression, pinned to the exact pair of
+    pages that the old cos(far_lat) upper bound got wrong."""
+    import pandas as pd
+
+    from yirgacheffe_spark.spatial import joins
 
     # Pinned minimal failure of the old cos(far_lat) formula (verified
     # numerically): for a query at (40, 179), the row-0 cell across the
@@ -924,3 +937,72 @@ def test_knn_polar_exact(spark):
         spark, pinned, [{"query_id": 1, "lat": 40.0, "lng": 179.0}],
         k=1, res=6, max_ring=1).collect()
     assert [r.url for r in got] == ["near"]
+
+
+def test_knn_res10_parent_histogram_fallback_exact(spark):
+    """Above HIST_MAX_RES the one fallback plans over the parent-cell
+    histogram at res 8: with max_ring=1 at res 10 most queries cannot
+    settle in their disk, and every query must still get its exact
+    brute-force top-k over a uniform + cluster + polar + antimeridian mix,
+    including queries in an empty latitude band."""
+    rng = np.random.default_rng(29)
+    lat = np.concatenate([
+        rng.uniform(-60, 60, 1500),                       # uniform
+        rng.normal(48.85, 0.3, 800),                      # cluster
+        rng.uniform(85, 89.99, 100), rng.uniform(-89.99, -85, 100),  # polar
+        rng.uniform(-20, 20, 300),                        # antimeridian
+    ])
+    lng = np.concatenate([
+        rng.uniform(-180, 180, 1500),
+        rng.normal(2.35, 0.3, 800),
+        rng.uniform(-180, 180, 200),
+        rng.choice([-1.0, 1.0], 300) * rng.uniform(179.0, 180.0, 300),
+    ])
+    urls = np.array([f"u{i}" for i in range(len(lat))])
+    pts = spark.createDataFrame(pd.DataFrame(
+        {"url": urls, "lat": lat, "lng": lng})).withColumn(
+        "cell", joins.cell_expr("lat", "lng", 10))
+    q_lat = np.concatenate([
+        rng.uniform(-60, 60, 10), rng.normal(48.85, 0.3, 6),
+        [89.9, 87.0, -88.5, 90.0], rng.uniform(-20, 20, 6),
+        rng.uniform(-75, -70, 6),                         # empty band
+    ])
+    q_lng = np.concatenate([
+        rng.uniform(-180, 180, 10), rng.normal(2.35, 0.3, 6),
+        [10.0, -170.0, 135.0, -180.0], [179.99, -179.99, 179.5, -179.5,
+                                        180.0, -180.0],
+        rng.uniform(-180, 180, 6),
+    ])
+    qdf = spark.createDataFrame(pd.DataFrame({
+        "query_id": np.arange(len(q_lat)), "lat": q_lat, "lng": q_lng}))
+    joins.invalidate_density_cache()
+    out = joins.knn_join_df(spark, pts, qdf, k=5, res=10,
+                            max_ring=1).collect()
+    assert any(key[1] == joins.HIST_MAX_RES for key in joins._CELL_HIST_CACHE)
+    by_q = {}
+    for r in out:
+        by_q.setdefault(r.query_id, []).append(r)
+    assert set(by_q) == set(range(len(q_lat)))
+    for qid, (qla, qln) in enumerate(zip(q_lat, q_lng)):
+        d = joins.haversine_m(lat, lng, qla, qln)
+        want = list(urls[np.lexsort((urls, d))[:5]])
+        got = [r.url for r in sorted(by_q[qid], key=lambda r: r.rank)]
+        assert got == want, (qid, qla, qln, got, want)
+
+
+def test_knn_histogram_plan_chunking_is_invisible(monkeypatch):
+    """PLAN_CHUNK_ELEMS only bounds the planner's per-chunk bound matrices:
+    1-query chunks produce the identical keep table."""
+    rng = np.random.default_rng(23)
+    page_cells = ci.latlng_to_cell(rng.uniform(-80, 80, 3000),
+                                   rng.uniform(-180, 180, 3000), 6)
+    hist = np.unique(page_cells, return_counts=True)
+    pdf = pd.DataFrame({"query_id": np.arange(300),
+                        "qlat": rng.uniform(-90, 90, 300),
+                        "qlng": rng.uniform(-180, 180, 300)})
+    geom = (180.0 / 64, 360.0 / 128)
+    base = joins._knn_histogram_plan(pdf, hist, geom, 5)
+    monkeypatch.setattr(joins, "PLAN_CHUNK_ELEMS", 1)
+    chunked = joins._knn_histogram_plan(pdf, hist, geom, 5)
+    assert base["query_id"].nunique() == 300
+    pd.testing.assert_frame_equal(base, chunked)

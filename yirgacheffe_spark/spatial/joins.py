@@ -15,7 +15,6 @@ aggregate-free joins.
 from __future__ import annotations
 
 import math
-import os
 
 import numpy as np
 import pandas as pd
@@ -94,16 +93,7 @@ def _pip_broadcast(
         return pages.where(F.lit(False)).withColumn(
             "poly_id", F.lit(None).cast(poly_id_type)
         )
-    try:
-        rings_bc = spark.sparkContext.broadcast(rings_by_id)
-    except Exception:  # pylint: disable=W0703
-        # Spark Connect has no sparkContext; ship the dict in the UDF
-        # closure instead (same data, serialized per task batch instead of
-        # once per worker — dim-sized by contract, so this is acceptable).
-        class _PlainValue:  # noqa: D401 - minimal .value shim
-            value = rings_by_id
-
-        rings_bc = _PlainValue()
+    rings_bc = spark.sparkContext.broadcast(rings_by_id)
 
     if len(cell_to_pids) <= 256:  # keep the CASE chain inside codegen limits
         chain = None
@@ -248,13 +238,12 @@ def point_in_polygon_join(
 # cache is driver-side, tiny (<= 64k float64 per entry), and bounded.
 _BAND_DENSITY_CACHE: dict = {}
 _BAND_DENSITY_CACHE_MAX = 32
-# (plan identity,) -> checkpointed per-cell count DataFrame (the exact-kNN
-# final pass's pruning histogram; same invalidation story as the band cache)
-_CELL_COUNT_CACHE: dict = {}
-# (plan identity,) -> (sorted cell ids, counts) numpy arrays — the
-# driver-side twin used when res is low enough that the nonempty-cell
-# histogram is driver-sized (<= 2*4^res rows)
+# (plan identity, hres) -> (sorted cell ids, counts) of the nonempty cells
+# at hres = min(res, HIST_MAX_RES): the exact-kNN fallback's histogram.
 _CELL_HIST_CACHE: dict = {}
+HIST_MAX_RES = 8  # caps that histogram at 2*4^8 = 131,072 rows at any res
+# (queries x cells) per chunk of the planner's ~10 float64 bound matrices
+PLAN_CHUNK_ELEMS = 1 << 23
 
 
 def _plan_identity(df: DataFrame):
@@ -262,8 +251,8 @@ def _plan_identity(df: DataFrame):
     backend doesn't expose one (then callers skip caching).
 
     ``_jdf`` + ``semanticHash`` are private Spark API (present and stable
-    across Spark 3.x/4.x on the JVM backend, absent on Spark Connect where
-    there is no local ``_jdf``) — hence the broad except: any change in
+    across Spark 3.x/4.x on the JVM backend, absent on any backend without
+    a local ``_jdf``) — hence the broad except: any change in
     either simply disables caching, it never changes results (covered by a
     test that forces this path)."""
     try:
@@ -280,7 +269,6 @@ def invalidate_density_cache() -> None:
     results exact), but every query would pay the escalation scan until
     the process restarts."""
     _BAND_DENSITY_CACHE.clear()
-    _CELL_COUNT_CACHE.clear()
     _CELL_HIST_CACHE.clear()
 
 
@@ -324,26 +312,27 @@ def _knn_histogram_plan(pdf: "pd.DataFrame", hist, geom, k: int) -> "pd.DataFram
     per (query, cell) SOUND distance bounds over the nonempty-cell
     histogram select the few cells that can hold the true top-k.
 
-    Bounds use the EXACT query point (not the cell-granular drow/dcol-1
-    forms of the distributed twin, which concede up to a full cell of
-    slack per axis).  UPPER bound: meridian leg to the cell's far
-    latitude edge + parallel leg (exact far longitude separation) with
-    the cos MAXIMISED over the cell's latitude range (1.0 across the
-    equator — the cos(far_lat) form understated ub for pole-adjacent
-    cells and pruned true nearest neighbors, test_knn_polar_exact).
-    Sorting cells by ub, the cheapest prefix holding k rows caps the
-    true k-th distance.  LOWER bound: max(meridian term of the exact
-    latitude gap, haversine longitude term with cos minimised over the
-    cell's latitude range) — cells with lb > cap cannot contribute.  The
-    transcendental lng term is evaluated only for cells whose cheap
-    meridian term survives the cap (the dense trig pass was the
-    planner's measured cost).
+    ``hist`` is (sorted cell ids, row counts) at the res whose cell size
+    ``geom`` gives; every bound below holds for ANY point of a cell's box,
+    so the cells may be coarser than the pages' own.  Bounds use the EXACT
+    query point.  UPPER bound: meridian leg to the cell's far latitude
+    edge + parallel leg (exact far longitude separation) with the cos
+    MAXIMISED over the cell's latitude range (1.0 across the equator —
+    the cos(far_lat) form understated ub for pole-adjacent cells and
+    pruned true nearest neighbors, test_knn_polar_exact).  Sorting cells
+    by ub, the cheapest prefix holding k rows caps the true k-th
+    distance.  LOWER bound: max(meridian term of the exact latitude gap,
+    haversine longitude term with cos minimised over the cell's latitude
+    range) — cells with lb > cap cannot contribute.  The transcendental
+    lng term is evaluated only for cells whose cheap meridian term
+    survives the cap (the dense trig pass was the planner's measured
+    cost).
 
     Returns (query_id, cell, qlat, qlng, cap) keep rows; ``cap`` lets the
     candidate fetch drop dist > cap rows exactly (>= k rows exist at
     <= cap by construction)."""
     h_cells, h_counts = hist
-    cell_h_deg, cell_w_deg, cols_n = geom
+    cell_h_deg, cell_w_deg = geom
     m_np = 111_194.9
     qid_a = pdf["query_id"].to_numpy()
     if len(qid_a) == 0 or len(h_cells) == 0:
@@ -365,8 +354,9 @@ def _knn_histogram_plan(pdf: "pd.DataFrame", hist, geom, k: int) -> "pd.DataFram
                          np.maximum(cos_n, cos_s))
     cell_lng0 = ccol.astype(np.float64) * cell_w_deg - 180.0
     keep = {"query_id": [], "cell": [], "qlat": [], "qlng": [], "cap": []}
-    for c0 in range(0, len(qid_a), 1024):
-        sl = slice(c0, c0 + 1024)
+    step = min(1024, max(1, PLAN_CHUNK_ELEMS // len(h_cells)))
+    for c0 in range(0, len(qid_a), step):
+        sl = slice(c0, c0 + step)
         ql, qg, qi = qlat_a[sl], qlng_a[sl], qid_a[sl]
         # Longitude separation from qlng to the cell's [l0, l0+cw)
         # interval on the circle: far separation is to the farther edge,
@@ -383,8 +373,8 @@ def _knn_histogram_plan(pdf: "pd.DataFrame", hist, geom, k: int) -> "pd.DataFram
             c_north_v[None, :], c_south_v[None, :])
         ub_m = (np.abs(ql[:, None] - far_m) * m_np
                 + far_lng * m_np * cos_par_v[None, :])
-        # Stable argsort over the cell-ascending axis reproduces the
-        # ORDER BY (_ub, cell) tie-break of the distributed twin.
+        # Stable argsort over the cell-ascending axis breaks ub ties by
+        # cell id.
         order = np.argsort(ub_m, axis=1, kind="stable")
         cnt_sorted = np.take(h_counts, order)
         cum_excl = np.cumsum(cnt_sorted, axis=1) - cnt_sorted
@@ -416,6 +406,17 @@ def _knn_histogram_plan(pdf: "pd.DataFrame", hist, geom, k: int) -> "pd.DataFram
     return pd.DataFrame({c: np.concatenate(v) for c, v in keep.items()})
 
 
+def _parent_cell(res: int, hres: int):
+    """``cell``'s ancestor at ``hres`` from its stored id bits (the JVM form
+    of ``cells.cell_parent``); the column itself when ``hres == res``."""
+    if hres == res:
+        return F.col("cell")
+    s, cell = res - hres, F.col("cell")
+    prow = F.shiftright(cell, 28 + s).bitwiseAND(F.lit(((1 << 28) - 1) >> s))
+    pcol = F.shiftright(cell.bitwiseAND(F.lit((1 << 28) - 1)), s)
+    return F.lit(hres << 56).bitwiseOR(F.shiftleft(prow, 28)).bitwiseOR(pcol)
+
+
 def haversine_col(lat, lng, qlat, qlng):
     """Great-circle metres as a JVM column expression (term-for-term mirror
     of ``haversine_m``, so both engines and the SQL oracle agree)."""
@@ -436,7 +437,6 @@ def knn_join_df(
     res: int = 7,
     max_ring: int = 6,
     id_col: str = "url",
-    broadcast_queries: bool = True,
     initial_ring: int | None = None,
     density_profile: "np.ndarray | None" = None,
 ) -> DataFrame:
@@ -458,11 +458,23 @@ def knn_join_df(
     rank, and the settle condition is then VERIFIED exactly: count >= k
     and k-th distance within the sound outside-point bound (min over
     integer row offsets d of max(d*cell_h meridian term, longitude chord
-    at the point's own latitude)).  Queries the bound cannot certify take
-    one cell-histogram-pruned exact pass: per-(query, cell) sound distance
-    bounds over the (cached) nonempty-cell counts shrink candidates to the
-    few cells around the nearest data, then one candidate-fetch scan and a
-    window rank.  The driver never sees a result row.
+    at the point's own latitude)).  The driver never sees a result row.
+
+    ONE fallback, at every res: queries the bound cannot certify take one
+    pass of ``_knn_histogram_plan`` over the (cached) nonempty-cell
+    histogram of PARENT cells at ``hres = min(res, HIST_MAX_RES)`` (the
+    identity at res <= 8), then one candidate-fetch scan of the pages whose
+    parent cell the plan kept, and the final window rank.  Why it is exact
+    at any res:
+
+    - every page lies inside its hres parent cell's box;
+    - the planner's ub/lb are box bounds that hold for ANY point of the
+      box, so they bound every page of a parent;
+    - a parent's count is the sum of its children's counts, so the
+      ub-sorted prefix of parents still holds >= k rows at distance <= cap;
+    - hence the true k-th distance is <= cap, and no parent with lb > cap
+      can hold a top-k page.  Dropping fetched rows with dist > cap is then
+      exact too.
 
     Why one-shot: the earliest multi-round shell expansion cost one full
     page scan PLUS an eager ``localCheckpoint`` barrier per round, and the
@@ -477,9 +489,6 @@ def knn_join_df(
     """
     from pyspark.sql import Window as W
 
-    if os.environ.get("YG_KNN_DEBUG"):
-        import time as _time_entry
-        _t_entry = _time_entry.time()
     rows_n, cols_n = 1 << res, 1 << (res + 1)
     cell_h_deg = 180.0 / rows_n
     cell_w_deg = 360.0 / cols_n
@@ -493,15 +502,9 @@ def knn_join_df(
     # coalesced to 64 tasks -> 0.8s, 4.6x).  Narrow coalesce keeps every
     # core busy (2 waves) without a repartition shuffle.
     pages = pages.select("cell", "lat", "lng", id_col)
-    try:
-        # sparkContext/.rdd are absent on Spark Connect; the coalesce is a
-        # shuffle-overhead optimisation, not a correctness step — skip it
-        # there rather than crash before the query runs.
-        target_parts = 2 * spark.sparkContext.defaultParallelism
-        if pages.rdd.getNumPartitions() > 2 * target_parts:
-            pages = pages.coalesce(target_parts)
-    except Exception:  # pylint: disable=W0703
-        pass
+    target_parts = 2 * spark.sparkContext.defaultParallelism
+    if pages.rdd.getNumPartitions() > 2 * target_parts:
+        pages = pages.coalesce(target_parts)
 
     q = queries.select(
         "query_id",
@@ -705,9 +708,7 @@ def knn_join_df(
         return disk
 
     def topk(disk: DataFrame) -> DataFrame:
-        cand = pages.join(
-            F.broadcast(disk) if broadcast_queries else disk, "cell", "inner"
-        )
+        cand = pages.join(F.broadcast(disk), "cell", "inner")
         hits = cand.select(
             "query_id",
             F.col(id_col).alias("neighbor_id"),
@@ -734,14 +735,7 @@ def knn_join_df(
     # pending collect below is then the scan's first action, so the disk
     # scan, the settle stats and the checkpoint materialise in ONE job
     # instead of paying a separate eager barrier first.
-    _dbg = os.environ.get("YG_KNN_DEBUG")
-    if _dbg:
-        import time as _t
-        _t_scan = _t.time()
-        print(f"KNN_DEBUG ring assignment+plan: {_t_scan-_t_entry:.2f}s")
     best = topk(make_disk(qr)).localCheckpoint(eager=False)
-    if _dbg:
-        print(f"KNN_DEBUG main scan (lazy): {_t.time()-_t_scan:.2f}s")
 
     # Exact settle verification (the density prediction above affects only
     # performance, never correctness).
@@ -779,40 +773,16 @@ def knn_join_df(
     is_settled = (F.col("_c") >= k) & (F.col("_kth") <= safe_v)
     pending = judged.where(~F.coalesce(is_settled, F.lit(False)))
     # Queries are dim-sized by contract, so collecting the UNSETTLED ones
-    # costs the same single job the old isEmpty() probe did, and powers the
-    # driver-side fallback planner below (which replaces ~6 sequential
-    # Spark jobs of crossJoin + window + joins with one numpy pass).
-    if _dbg:
-        _t0 = _t.time()
-    pending_rows = pending.select(
-        "query_id", "qlat", "qlng", "qrow", "qcol").collect()
-    if _dbg:
-        print("KNN_DEBUG pending:", len(pending_rows),
-              f"[{_t.time()-_t0:.2f}s]")
-        _t0 = _t.time()
+    # costs the same single job the old isEmpty() probe did, and feeds the
+    # fallback planner below.
+    pending_rows = pending.select("query_id", "qlat", "qlng").collect()
 
     if not pending_rows:
         out = best
-    elif res <= int(os.environ.get("YG_KNN_DRIVER_HIST_RES", "8")):
-        # Cell-histogram-pruned exact pass (SINGLE pass, no escalation
-        # loop) for what the disk bound could not certify (empty-region
-        # queries, k-th neighbor thousands of km out; plus the remote
-        # bands deliberately rerouted here by the max_ring clamp above).
-        # Per (query, cell) pair SOUND distance bounds from cell geometry:
-        # sorting cells by the upper bound, the first prefix holding k rows
-        # caps the true k-th distance, and cells whose LOWER bound exceeds
-        # that cap cannot contribute — candidates collapse to the few cells
-        # around the nearest data cluster instead of query x table.
-        #
-        # At res <= 8 the nonempty-cell histogram is bounded (<= 2*4^res <=
-        # 131k rows — collected ONCE per table and cached like the band
-        # profile), so the cap/keep planning is a vectorised numpy pass on
-        # the driver: the distributed formulation of the same math spent
-        # ~3s per call on six job barriers (crossJoin + window + two joins
-        # + two broadcast rebuilds of the pending plan) to prune what is
-        # arithmetically a sub-millisecond 279 x 6k bound matrix.  Beyond
-        # res 8 the histogram is no longer driver-sized and the distributed
-        # path below runs instead (same bounds, same exactness).
+    else:
+        # The one exact fallback (see the docstring) for what the disk
+        # bound could not certify: empty-region queries, plus the remote
+        # bands deliberately rerouted here by the max_ring clamp above.
         if len(pending_rows) <= 16384:
             out = best.where(
                 ~F.col("query_id").isin([r["query_id"] for r in pending_rows])
@@ -822,39 +792,29 @@ def knn_join_df(
                 F.broadcast(pending.select("query_id")),
                 "query_id", "left_anti",
             )
-        if _dbg:
-            print(f"KNN_DEBUG settled filter build: {_t.time()-_t0:.2f}s")
-            _t0 = _t.time()
-        ident = _plan_identity(pages)
-        hist = _CELL_HIST_CACHE.get(ident) if ident is not None else None
+        # The parent-cell histogram (<= 2*4^hres rows) is collected ONCE per
+        # (table, hres) and cached like the band profile.
+        hres = min(res, HIST_MAX_RES)
+        parent = _parent_cell(res, hres)
+        key = (_plan_identity(pages), hres)
+        hist = _CELL_HIST_CACHE.get(key)
         if hist is None:
-            rows = pages.groupBy("cell").agg(F.count("*").alias("_n")).collect()
+            rows = pages.groupBy(parent.alias("cell")).agg(
+                F.count("*").alias("_n")).collect()
             h_cells = np.array([r["cell"] for r in rows], dtype=np.int64)
             h_counts = np.array([r["_n"] for r in rows], dtype=np.int64)
             order = np.argsort(h_cells)
             hist = (h_cells[order], h_counts[order])
-            if ident is not None:
+            if key[0] is not None:
                 while len(_CELL_HIST_CACHE) >= _BAND_DENSITY_CACHE_MAX:
                     _CELL_HIST_CACHE.pop(next(iter(_CELL_HIST_CACHE)))
-                _CELL_HIST_CACHE[ident] = hist
-        h_cells, h_counts = hist
-        if _dbg:
-            print(f"KNN_DEBUG ident+hist: {_t.time()-_t0:.2f}s")
-            _t0 = _t.time()
-        if h_cells.size == 0:
-            # Empty pages table: no candidates exist anywhere; the settled
-            # side (also empty) is the whole answer.
-            return out.withColumn("rank", F.lit(1)).where(F.lit(False)).select(
-                "query_id", F.col("neighbor_id").alias(id_col), "dist_m", "rank")
+                _CELL_HIST_CACHE[key] = hist
         qid_type = dict(q.dtypes)["query_id"]
-        # The cap/keep planning itself runs DISTRIBUTED: one mapInPandas
-        # over the (dim-sized) pending queries, executed inside the
-        # broadcast build of the keep table — no extra job barrier, and
-        # the bound matrices are spread over the cluster instead of
-        # serialising on the driver (the driver-side numpy formulation
-        # measured 0.5-1.3s for 279 x 6k pairs on this memory-bound VM).
-        # The histogram arrays ride in the closure (~16 bytes/nonempty
-        # cell, bounded by the res <= 8 gate above).
+        # The cap/keep planning runs DISTRIBUTED: one mapInPandas over the
+        # (dim-sized) pending queries, executed inside the broadcast build
+        # of the keep table — no extra job barrier, and the bound matrices
+        # are spread over the cluster instead of serialising on the driver.
+        # The histogram rides in the closure (~16 bytes per nonempty cell).
         pend_df = spark.createDataFrame(
             pd.DataFrame({
                 "query_id": [r["query_id"] for r in pending_rows],
@@ -866,7 +826,7 @@ def knn_join_df(
         n_plan_parts = max(1, min(len(pending_rows) // 8 + 1, 64))
         if n_plan_parts > 1:
             pend_df = pend_df.repartition(n_plan_parts)
-        geom = (cell_h_deg, cell_w_deg, cols_n)
+        geom = (180.0 / (1 << hres), 360.0 / (1 << (hres + 1)))
 
         def plan_gen(batches, _hist=hist, _geom=geom, _k=k):
             for pdf in batches:
@@ -876,11 +836,13 @@ def knn_join_df(
             plan_gen,
             schema=(f"query_id {qid_type}, cell long, qlat double, "
                     "qlng double, cap double"),
-        )
+        ).withColumnRenamed("cell", "pcell")
         # dist > cap rows cannot be top-k (the cap's prefix cells already
         # hold >= k rows at <= cap), so they are dropped BEFORE the union
         # feeds the final rank's exchange.
-        final = pages.join(F.broadcast(kp), "cell", "inner").select(
+        final = pages.join(
+            F.broadcast(kp), parent == F.col("pcell"), "inner"
+        ).select(
             "query_id",
             F.col(id_col).alias("neighbor_id"),
             haversine_col(
@@ -888,119 +850,6 @@ def knn_join_df(
             ).alias("dist_m"),
             "cap",
         ).where(F.col("dist_m") <= F.col("cap")).drop("cap")
-        out = out.unionByName(final)
-        if _dbg:
-            print(f"KNN_DEBUG kp+final build: {_t.time()-_t0:.2f}s")
-    else:
-        # Distributed twin of the driver-side planner above, for res > 8
-        # where the nonempty-cell histogram may exceed driver bounds.
-        out = best.join(
-            F.broadcast(judged.where(F.coalesce(is_settled, F.lit(False)))
-                        .select("query_id")),
-            "query_id", "left_semi",
-        )
-        final_q = pending.select("query_id", "qlat", "qlng", "qrow", "qcol")
-        # Checkpointed: ~one row per nonempty cell, consumed by caps
-        # AND keep AND the candidate join — without it each action
-        # re-runs the full pages scan behind the groupBy.  Cached per
-        # table plan (like the band-density profile): repeated kNN
-        # calls against the same table skip the scan entirely.
-        ident = _plan_identity(pages)
-        cnts = _CELL_COUNT_CACHE.get(ident) if ident is not None else None
-        if cnts is None:
-            cnts = pages.groupBy("cell").agg(
-                F.count("*").alias("_n")).localCheckpoint(eager=False)
-            if ident is not None:
-                while len(_CELL_COUNT_CACHE) >= _BAND_DENSITY_CACHE_MAX:
-                    _CELL_COUNT_CACHE.pop(next(iter(_CELL_COUNT_CACHE)))
-                _CELL_COUNT_CACHE[ident] = cnts
-        cell_row = (F.col("cell") / F.lit(1 << 28)).cast("long") % F.lit(1 << 28)
-        cell_col = F.col("cell") % F.lit(1 << 28)
-        dcol = F.abs(cell_col - F.col("qcol"))
-        dcol = F.least(dcol, F.lit(cols_n) - dcol)  # longitude wrap
-        drow = F.abs(cell_row - F.col("qrow"))
-        m_deg = F.lit(111_194.9)
-        # Sound LOWER bound on the distance to any point of the cell:
-        # the meridian term (distance >= R * delta_lat, always) and the
-        # haversine longitude term (sin^2(d/2) >= cos(p1) cos(p2)
-        # sin^2(dlng/2), minimized over the cell's latitude range via
-        # its most poleward edge).  The earlier disk-chord bound
-        # collapsed to ~0 at high latitudes and kept every cell.
-        gap_lat = F.greatest(drow.cast("double") - 1, F.lit(0.0)) \
-            * F.lit(cell_h_deg)
-        gap_lng = F.greatest(dcol.cast("double") - 1, F.lit(0.0)) \
-            * F.lit(cell_w_deg)
-        c_north = F.lit(90.0) - cell_row.cast("double") * F.lit(cell_h_deg)
-        c_south = c_north - F.lit(cell_h_deg)
-        cos_cell = F.least(F.cos(F.radians(c_north)),
-                           F.cos(F.radians(c_south)))
-        lb_lng = F.lit(2.0 * EARTH_RADIUS_M) * F.asin(
-            F.sqrt(F.greatest(
-                F.cos(F.radians(F.col("qlat"))) * cos_cell, F.lit(0.0)))
-            * F.sin(F.radians(gap_lng) / 2)
-        )
-        lb = F.greatest(gap_lat * m_deg, lb_lng)
-        # Sound UPPER bound: meridian leg to the cell's far latitude
-        # edge, then the parallel leg AT THE TARGET POINT'S latitude.
-        # The point may sit anywhere in the cell's latitude range, so the
-        # parallel leg must use the cos that MAXIMIZES it over
-        # [c_south, c_north]: 1.0 when the cell straddles the equator,
-        # else the larger of the two edge cosines.  (The previous
-        # cos(far_lat) understated ub by up to ~cell_h*R for pole-adjacent
-        # cells — far_lat at +-90 collapses the leg to 0 — which let the
-        # cap prune cells holding the true nearest neighbor for polar
-        # queries; see test_knn_polar_exact.)
-        far_lat = F.when(
-            F.abs(F.col("qlat") - c_north) > F.abs(F.col("qlat") - c_south),
-            c_north,
-        ).otherwise(c_south)
-        cos_par = F.when(
-            (c_north >= 0) & (c_south <= 0), F.lit(1.0)
-        ).otherwise(
-            F.greatest(F.cos(F.radians(c_north)), F.cos(F.radians(c_south)))
-        )
-        ub = (
-            F.abs(F.col("qlat") - far_lat) * m_deg
-            + (dcol.cast("double") + 1) * F.lit(cell_w_deg) * m_deg
-            * cos_par
-        )
-        pairs = cnts.crossJoin(
-            F.broadcast(final_q.select("query_id", "qlat", "qrow", "qcol"))
-        ).select(
-            "query_id", "cell", "_n",
-            lb.alias("_lb"), ub.alias("_ub"),
-        )
-        w_ub = (
-            W.partitionBy("query_id").orderBy(F.col("_ub").asc(),
-                                              F.col("cell").asc())
-            .rowsBetween(W.unboundedPreceding, -1)
-        )
-        caps = (
-            pairs.withColumn("_cum", F.coalesce(F.sum("_n").over(w_ub),
-                                                F.lit(0)))
-            .where(F.col("_cum") < k)  # rows up to and incl. the k-th
-            .groupBy("query_id").agg(F.max("_ub").alias("_cap"))
-        )
-        keep = (
-            pairs.join(F.broadcast(caps), "query_id", "inner")
-            .where(F.col("_lb") <= F.col("_cap"))
-            .select("query_id", "cell")
-        ).localCheckpoint(eager=False)
-        final_cand = pages.join(
-            F.broadcast(keep), "cell", "inner"
-        ).join(
-            F.broadcast(final_q.select("query_id", "qlat", "qlng")),
-            "query_id", "inner",
-        )
-        final = (
-            final_cand.select(
-                "query_id",
-                F.col(id_col).alias("neighbor_id"),
-                haversine_col(
-                    F.col("lat"), F.col("lng"), F.col("qlat"), F.col("qlng")
-                ).alias("dist_m"),
-            )
-        )
         out = out.unionByName(final)
 
     out = (
@@ -1018,7 +867,7 @@ def knn_join_df(
     # `best` is localCheckpoint-backed (executor-resident, <= k rows per
     # query); Spark's ContextCleaner reclaims it when the result goes out of
     # scope.  The driver never holds result rows — only the dim-sized
-    # unsettled-query list and (at low res) the bounded cell histogram.
+    # unsettled-query list and the bounded parent-cell histogram.
     return out
 
 
